@@ -442,7 +442,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     val v = (0 to cur).reverse.find { i =>
       val p = Paths.get(dir, f"manifest-v$i%08d.json")
       Files.exists(p) && {
-        val millis = ManifestTable.commitInstantMillis(dir, i)
+        val millis = ManifestTable.snapshot(dir, i).ts
           .getOrElse(Files.getLastModifiedTime(p).toInstant.toEpochMilli)
         millis * 1000L <= timestampMicros
       }
@@ -457,28 +457,27 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     * a staging directory that moves into place on commit. */
   private def commitCreate(dir: String, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Unit = {
-    // TBLPROPERTIES persist as #prop marker lines in the v0 manifest
+    // TBLPROPERTIES persist as table properties of the v0 snapshot
     // (Spark's reserved engine properties are not table configuration)
     val reserved = Set("provider", "location", "comment", "owner", "external")
     val props = properties.asScala.toSeq.sortBy(_._1)
       .filterNot { case (k, _) => reserved(k) || k.startsWith("option.") }
-      .map { case (k, v) => s"#prop\t$k\t$v" }
     // PARTITIONED BY persists as an ordinary table property (it rides
-    // carriedMeta through every commit for free). This format has no
+    // through every commit like any property). This format has no
     // directory layout to maintain — partitioning is a WRITE-CLUSTERING
     // declaration: inserts shape data so each partition value lands in
     // value-pure (identity) or key-owned (bucket) files, and the recorded
     // per-file stats make the existing pruning serve partition predicates
     // with zero new read machinery.
-    val partLine =
+    val partProp =
       if (partitions.isEmpty) Seq.empty
-      else Seq(s"#prop\tgraft.partitioning\t" +
-        GraftCatalog.encodePartitioning(partitions))
+      else Seq("graft.partitioning" -> GraftCatalog.encodePartitioning(partitions))
     // the declared schema is the empty table's authority (files, once
     // inserted, take over as the observed ground truth)
-    val schemaLine =
-      if (schema.isEmpty) Seq.empty else Seq(s"#schema\t${schema.json}")
-    require(ManifestTable.commit(dir, props ++ partLine ++ schemaLine, -1))
+    require(ManifestTable.publish(dir, ManifestTable.Snapshot(-1,
+      props = props ++ partProp,
+      schema = Some(schema).filter(_.nonEmpty).map(_.json)),
+      ManifestTable.Kind.Data))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -600,7 +599,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
         Seq(ManifestTable.AlterOp.WidenCol(ut.fieldNames().head,
           ut.newDataType()))
       // CHECK CONSTRAINTS as table properties: `graft.constraint.<name>`
-      // holds the URL-encoded predicate SQL, so the always-carried #prop
+      // holds the URL-encoded predicate SQL, so the always-carried property
       // machinery gives persistence, atomic multi-change ALTER, and
       // time-travel for free. Spark validates existing rows BEFORE
       // calling this (AddCheckConstraintExec full scan) and enforces the
@@ -618,10 +617,8 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
         // Markers key under their DELETE-TIME name; compare under the
         // evolved name, which is what a DROP statement can reference.
         require({
-          val vNow = ManifestTable.currentVersion(dir)
-          ManifestTable.dvEntries(dir, vNow).forall(d =>
-            ManifestTable.aliasFamily(dir, vNow, d.col).head !=
-              dc.fieldNames().head)
+          val now = ManifestTable.head(dir)
+          now.dvs.forall(d => now.aliasFamily(d.col).head != dc.fieldNames().head)
         }, s"DROP COLUMN '${dc.fieldNames().head}' refused: a live " +
             "deletion vector keys on it — compact first")
         Seq(ManifestTable.AlterOp.DropCol(dc.fieldNames().head),
@@ -976,9 +973,8 @@ private[sources] object GraftProcedures {
         case "rewrite_dvs" => ManifestTable.consolidateDvs(s, dir)
         case "price_dvs" => ManifestTable.priceDvs(s, dir)
         case "optimize" =>
-          val prev = ManifestTable.currentVersion(dir)
-          val entries = ManifestTable.listLines(dir, prev)
-            .map(ManifestTable.parseEntry)
+          val prev = ManifestTable.head(dir)
+          val entries = prev.entries
           val stats = entries
             .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
           // PARTITION-SCOPED maintenance: `partition => 'yr=1997'`
@@ -990,7 +986,7 @@ private[sources] object GraftProcedures {
           val only =
             if (part.isEmpty) None
             else {
-              val spec = ManifestTable.tableProperties(dir, prev)
+              val spec = prev.properties
                 .getOrElse("graft.partitioning",
                   throw new IllegalArgumentException(
                     s"optimize(partition => '$part'): $dir declares no " +
@@ -1093,9 +1089,7 @@ private[sources] object GraftProcedures {
             t.split('.').filterNot(_ == "default").mkString(".") ->
               ((td, tv))
           }.toMap
-          var committed = -1
-          var attempt = 0
-          while (committed < 0) {
+          val committed = ManifestTable.retryCas("txn_commit", croot) {
             val cur = Catalog.currentVersion(croot)
             // under an explicit begin the commit is OPTIMISTIC: a catalog
             // that moved past the recorded version means another
@@ -1111,18 +1105,13 @@ private[sources] object GraftProcedures {
             val carried =
               if (cur < 0) Map.empty[String, (String, Int)]
               else Catalog.snapshot(croot, cur)
-            if (Catalog.commit(croot, carried ++ pinsNow(), cur))
-              committed = cur + 1
+            if (Catalog.commit(croot, carried ++ pinsNow(), cur)) Some(cur + 1)
             else if (began.isDefined) {
               s.conf.unset(key)
               throw new IllegalStateException(
                 "txn_commit refused: lost the catalog CAS to a " +
                   "concurrent transaction — begin again and re-validate")
-            } else {
-              attempt += 1
-              require(attempt < 10,
-                s"txn_commit lost the catalog CAS 10 times in $croot")
-            }
+            } else None
           }
           s.conf.unset(key)
           committed
@@ -1356,15 +1345,14 @@ private[sources] class GraftStagedTable(ident: String, tmpDir: String,
       Files.move(Paths.get(tmpDir), Paths.get(finalDir),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     case Some(v) =>
-      val tv = ManifestTable.currentVersion(tmpDir)
-      val body = ManifestTable.listLines(tmpDir, tv) ++
-        ManifestTable.carriedMeta(tmpDir, tv)
+      val staged = ManifestTable.head(tmpDir)
+        .copy(version = v, dvs = Nil, renames = Nil)
       Files.createDirectories(Paths.get(finalDir, "data"))
       ManifestTable.listDir(Paths.get(tmpDir, "data")).foreach { p =>
         Files.move(p, Paths.get(finalDir, "data", p.getFileName.toString),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
-      require(ManifestTable.commitMutate(finalDir, body, v),
+      require(ManifestTable.publish(finalDir, staged, ManifestTable.Kind.Mutate),
         s"REPLACE TABLE $ident lost the publish race: the table was " +
           s"committed past version $v while the replacement staged")
       abortStagedChanges() // staging dir is husk now (manifests only)
@@ -1715,7 +1703,7 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     * raw by design (engine maintenance must see true rows). */
   private def governed: Boolean = {
     val v = ManifestTable.currentVersion(dir)
-    v >= 0 && ManifestTable.policyLines(dir, v).nonEmpty
+    v >= 0 && ManifestTable.snapshot(dir, v).policies.nonEmpty
   }
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean = {
@@ -1725,8 +1713,7 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     // generations. The MOR paths COMPOSE with renames (round 14): the
     // stats prune walks the key column's alias family and the marker
     // stages under the evolved name.
-    def renamed: Boolean = ManifestTable.renameLines(dir,
-      ManifestTable.currentVersion(dir)).nonEmpty
+    def renamed: Boolean = ManifestTable.head(dir).renames.nonEmpty
     pinned.isEmpty && !governed &&
       (isTruncate(filters) ||
         (parseDelete(filters).isDefined &&
@@ -1740,15 +1727,11 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
     if (isTruncate(filters)) {
       // unconditional DELETE: one mutate commit listing no data files
       // (policies/properties survive — they are the table, not its rows)
-      var attempt = 0
-      while (attempt < 10) {
-        val cur = ManifestTable.currentVersion(dir)
-        require(cur >= 0, s"no committed snapshot to delete from in $dir")
-        if (ManifestTable.commitMutate(dir,
-            ManifestTable.carriedMeta(dir, cur), cur)) return
-        attempt += 1
+      ManifestTable.commitLoop(dir, "DELETE") { cur =>
+        require(cur.version >= 0, s"no committed snapshot to delete from in $dir")
+        Some(cur.copy(files = Nil, dvs = Nil, renames = Nil) ->
+          ManifestTable.Kind.Mutate)
       }
-      throw new IllegalStateException(s"DELETE lost 10 commit races in $dir")
     } else parseDelete(filters) match {
       case Some((col, keys)) =>
         if (morMode) ManifestTable.deleteKeysMOR(s, dir, col, keys)
@@ -1765,9 +1748,10 @@ private[sources] class ManifestSqlTable(ident: String, dir: String,
   }
 
   override def schema(): StructType = {
-    val v = pinned.getOrElse(ManifestTable.currentVersion(dir))
-    val files = ManifestTable.listFiles(dir, v)
-    val declared = ManifestTable.declaredSchema(dir, v)
+    val snap = ManifestTable.snapshot(dir,
+      pinned.getOrElse(ManifestTable.currentVersion(dir)))
+    val files = snap.names
+    val declared = snap.schema
       .map(org.apache.spark.sql.types.DataType.fromJson(_)
         .asInstanceOf[StructType])
     if (files.isEmpty) // fresh CREATE TABLE / fully-deleted: the declared
@@ -1839,6 +1823,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
   // captured once, so an exactness proof made at filter-pushdown time can
   // never be invalidated by a commit landing before the scan builds
   private val snapV: Int = pinned.getOrElse(ManifestTable.currentVersion(dir))
+  private lazy val snap = ManifestTable.snapshot(dir, snapV)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
@@ -1866,8 +1851,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
       : Boolean = {
     import org.apache.spark.sql.connector.expressions.{NamedReference,
       NullOrdering, SortDirection}
-    val v = snapV
-    val sortCols = ManifestTable.tableProperties(dir, v)
+    val sortCols = snap.properties
       .get("graft.write.sort").toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     val reqCols = orders.toSeq.map { o =>
@@ -1916,7 +1900,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     * generation's name (reusing a renamed-away name refuses at commit).
     * Resolution failures decline to identity; build() raises them. */
   private lazy val statRenames: Map[String, String] =
-    scala.util.Try(ManifestTable.finalNames(dir, snapV))
+    scala.util.Try(snap.finalNames)
       .getOrElse(Map.empty)
   /** Stats are UNUSABLE when a renamed-away name was re-added as a new
     * column (`RENAME a TO b` then `ADD COLUMN a`): a file's 'a' stat leg
@@ -1960,13 +1944,11 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // WHERE part = v` stays metadata-served. Anything not provable stays
     // residual — stats admission is a SUPERSET there and the
     // re-evaluation keeps answers exact.
-    val entries = ManifestTable.listLines(dir, snapV)
-      .map(ManifestTable.parseEntry).map(evolve)
+    val entries = snap.entries.map(evolve)
     // renames do NOT make exactness unprovable (round 14): normalized
     // stats describe the same values under the evolved names
     val unprovable = entries.isEmpty ||
-      ManifestTable.policyLines(dir, snapV).nonEmpty ||
-      ManifestTable.dvLines(dir, snapV).nonEmpty
+      snap.policies.nonEmpty || snap.dvs.nonEmpty
     val survivors = entries.filter(e => pushed.forall(admits(_, e)))
     def whollySatisfied(f: Filter): Boolean = f match {
       case _ if unprovable => false
@@ -2010,10 +1992,9 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar,
       Max, Min, Sum}
     import org.apache.spark.sql.types._
-    val v = snapV
     if (!statsUsable) return false // re-added freed name: build() refuses
-    if (ManifestTable.policyLines(dir, v).nonEmpty) return false // filtered answers differ
-    val dvsAtV = ManifestTable.dvEntries(dir, v)
+    if (snap.policies.nonEmpty) return false // filtered answers differ
+    val dvsAtV = snap.dvs
     if (dvsAtV.nonEmpty) {
       // POSITIONAL markers keep COUNT(*) metadata-served (round 14):
       // a `_pos` marker records EXACT doomed ordinals. KEYED markers
@@ -2030,8 +2011,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
           _.isInstanceOf[CountStar])) return false
       val countsOpt = ManifestTable.doomedCountsByTarget(dir, dvsAtV)
       if (countsOpt.isEmpty) return false
-      val pentries = ManifestTable.listLines(dir, v)
-        .map(ManifestTable.parseEntry)
+      val pentries = snap.entries
       if (pentries.isEmpty || pentries.exists(_.rows.isEmpty)) return false
       val names = pentries.map(_.name).toSet
       val live = pentries.flatMap(_.rows).sum -
@@ -2047,7 +2027,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // residual filter remains, and exactness means every admitted file's
     // rows ALL match); any partially-applied filter declines
     if (pushed.nonEmpty && !allPushedExact) return false
-    val entries = ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry)
+    val entries = snap.entries
       .map(evolve).filter(e => pushed.forall(admits(_, e)))
     if (entries.isEmpty) return false
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
@@ -2211,7 +2191,6 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // the snapshot pinned at BUILDER construction (or the time-travel
     // version): the whole query — pruning, exactness proofs, the scan —
     // reads one version, whatever commits land while it runs
-    val v = snapV
     // RENAME COLUMN reconciliation (round 13): evolved name → prior
     // names (most recent first, chains collapsed); executor readers
     // decode whichever generation each file carries. Requires a declared
@@ -2222,19 +2201,19 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // evolved name for typing/ordinals and decode each data file's own
     // generation through the alias chain.
     val aliases: Map[String, Seq[String]] = {
-      if (ManifestTable.renames(dir, v).nonEmpty)
-        require(ManifestTable.declaredSchema(dir, v).isDefined,
+      if (snap.renames.nonEmpty)
+        require(snap.schema.isDefined,
           s"catalog scan of $dir refused: rename markers on a table with " +
             "no declared schema — compact first, or read via " +
             "ManifestTable.read")
-      RenameAliases.of(dir, v, full.fieldNames)
+      RenameAliases.of(dir, snap.renames, full.fieldNames)
     }
     // MERGE-ON-READ: `#dv` markers serve through the scan itself —
     // readers drop doomed rows in flight (key sets cached per executor),
     // so a MOR-deleted table answers exact SQL without compaction. File
     // pruning stays sound (stats are supersets of live rows); aggregate/
     // exact-filter/limit pushdowns already decline under DVs.
-    val dvs = ManifestTable.dvEntries(dir, v)
+    val dvs = snap.dvs
     // the in-flight filter reconstructs keys as sorted longs or raw
     // UTF-8 byte arrays, so every DV key column must be integral or
     // string in the declared schema — anything else keeps the old
@@ -2255,8 +2234,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     }
     val dvByName: Map[String, Seq[(String, String)]] =
       if (dvs.isEmpty) Map.empty
-      else ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry)
-        .flatMap { e =>
+      else snap.entries.flatMap { e =>
           val app = dvs.filter(_.targets.contains(e.name))
             .map(d => (ManifestTable.dataPath(dir, d.file), d.col))
           if (app.isEmpty) None else Some(e.name -> app)
@@ -2265,7 +2243,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
       dvs.map(_.col).distinct
         .map(RenameAliases.evolvedOf(aliases, _)).distinct
         .flatMap(c => full.fields.find(_.name == c))
-    val pols = ManifestTable.policyLines(dir, v).map(_.split('\t'))
+    val pols = snap.policies
     if (pols.nonEmpty)
       // governed table: serve a policy-ENFORCING scan (filter-then-mask,
       // the readGoverned semantics) instead of refusing — SQL consumers
@@ -2278,8 +2256,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
       // REFERENCE a renamed column, so every bound policy expression
       // names stable columns; the governed reader's alias-aware decode
       // serves renamed ones the query selected
-      return governedScan(
-        ManifestTable.listLines(dir, v).map(ManifestTable.parseEntry), pols,
+      return governedScan(snap.entries, pols,
         dvByName, dvFields, aliases)
     // SEGMENTED snapshots resolve through the manifest list: pushed
     // predicates admit segments by their summary stats first (sound —
@@ -2327,7 +2304,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     // the rename chain) so runtime file pruning, CBO column stats, NDV,
     // and histograms stay armed on renamed tables — names/buckets/row
     // counts are untouched, so partition planning is identical
-    ManifestTable.segmentedEntries(dir, v,
+    ManifestTable.segmentedEntries(snap,
         if (pushed.isEmpty) _ => true else fileAdmit) match {
       case Some((entries, _, _, totalFiles)) =>
         admittedFiles = Some(entries.map(_.name).toSet)
@@ -2336,8 +2313,7 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
           rowCap = limit, dvByName = dvByName, dvFields = dvFields,
           aliases = aliases, streamStart = streamStart)
       case None =>
-        val entries = ManifestTable.listLines(dir, v)
-          .map(ManifestTable.parseEntry).map(evolve) // once, not per check
+        val entries = snap.entries.map(evolve) // once, not per check
         val admitted =
           if (pushed.isEmpty) entries
           else entries.filter(e => pushed.forall(admits(_, e)))
@@ -2359,13 +2335,13 @@ private[sources] class ManifestSqlScanBuilder(dir: String, full: StructType,
     * the query did not select are decoded for evaluation but never
     * surfaced. */
   private def governedScan(entries: Seq[ManifestTable.FileEntry],
-      pols: Seq[Array[String]],
+      pols: Seq[ManifestTable.Policy],
       dvByName: Map[String, Seq[(String, String)]] = Map.empty,
       dvFields: Seq[StructField] = Nil,
       aliases: Map[String, Seq[String]] = Map.empty): Scan = {
-    val filterStrs = pols.collect { case Array(_, "filter", e) => e }.toSeq
-    val maskPairs = pols.collect { case Array(_, "mask", c, e) => (c, e) }
-      .toSeq.filter(p => required.fieldNames.toSet(p._1))
+    val filterStrs = pols.collect { case ManifestTable.Policy(None, e) => e }
+    val maskPairs = pols.collect { case ManifestTable.Policy(Some(c), e) => (c, e) }
+      .filter(p => required.fieldNames.toSet(p._1))
     val (decodeSchema, boundFilter, outProjs) =
       GovernedExprs.bind(full, required, pols)
     val parts: Array[InputPartition] = entries.map { e =>
@@ -2416,9 +2392,8 @@ private[sources] object RenameAliases {
     e +: aliases.getOrElse(e, Nil)
   }
 
-  def of(dir: String, v: Int, currentFields: Seq[String])
+  def of(dir: String, rns: Seq[(String, String)], currentFields: Seq[String])
       : Map[String, Seq[String]] = {
-    val rns = ManifestTable.renames(dir, v)
     if (rns.isEmpty) return Map.empty
     val anc = scala.collection.mutable.LinkedHashMap[String, List[String]]()
     rns.foreach { case (from, to) =>
@@ -2445,16 +2420,17 @@ private[sources] object RenameAliases {
 private[sources] object GovernedExprs {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
-  def bind(full: StructType, required: StructType, pols: Seq[Array[String]])
+  def bind(full: StructType, required: StructType,
+      pols: Seq[ManifestTable.Policy])
       : (StructType, Option[Expression], Seq[Expression]) = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, And,
       AttributeSeq, BindReferences, BoundReference, Cast}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val s = org.apache.spark.sql.SparkSession.active
-    val filterStrs = pols.collect { case Array(_, "filter", e) => e }.toSeq
+    val filterStrs = pols.collect { case ManifestTable.Policy(None, e) => e }
     val selected = required.fieldNames.toSet
-    val maskPairs = pols.collect { case Array(_, "mask", c, e) => (c, e) }
-      .toSeq.filter(p => selected(p._1))
+    val maskPairs = pols.collect { case ManifestTable.Policy(Some(c), e) => (c, e) }
+      .filter(p => selected(p._1))
     // one dummy plan resolves every policy expression against the raw
     // schema with one consistent set of attribute ids
     val dummy = s.createDataFrame(
@@ -3619,23 +3595,13 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
           val staged = messages.collect { case GraftFileCommit(n, r) =>
             s"$n\t__rows=$r;__bytes=${java.nio.file.Files.size(
               java.nio.file.Paths.get(dir, "data", n))}" }
-          var attempt = 0
-          while (attempt < 10) {
-            val v = ManifestTable.currentVersion(dir)
-            require(v >= 0, s"streaming write target $dir has no snapshot")
-            if (ManifestTable.committedEpoch(dir, v, queryId).exists(_ >= epochId))
-              return // replayed epoch: already committed — exactly-once no-op
-            val markers = ManifestTable.carriedMeta(dir, v)
-              .filterNot(_.startsWith(s"#epoch\t$queryId\t")) :+
-              s"#epoch\t$queryId\t$epochId"
-            val body = ManifestTable.listLines(dir, v) ++ staged ++
-              ManifestTable.dvLines(dir, v) ++
-              ManifestTable.renameLines(dir, v) ++ markers
-            if (ManifestTable.commit(dir, body, v)) return
-            attempt += 1 // lost a race with a batch writer: re-read, retry
+          ManifestTable.commitLoop(dir, s"streaming epoch $epochId") { cur =>
+            require(cur.version >= 0, s"streaming write target $dir has no snapshot")
+            // a replayed epoch is already committed — exactly-once no-op
+            if (cur.epoch(queryId).exists(_ >= epochId)) None
+            else Some(cur.copy(files = cur.files ++ staged)
+              .withEpoch(queryId, epochId) -> ManifestTable.Kind.Data)
           }
-          throw new IllegalStateException(
-            s"streaming epoch $epochId lost 10 commit races in $dir")
         }
         override def abort(epochId: Long,
             messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
@@ -3692,10 +3658,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
 
         private def doInsert(s: org.apache.spark.sql.SparkSession,
             data0: DataFrame): Unit = {
-          var attempt = 0
-          var done = false
-          while (!done && attempt < 10) {
-            val v = ManifestTable.currentVersion(dir)
+          ManifestTable.commitLoop(dir, "INSERT") { cur =>
             // GENERATED ALWAYS AS — computed HERE, at write (Spark's
             // analyzer validates the expression at CREATE but leaves the
             // computation to the connector): the declared expression
@@ -3704,7 +3667,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // partitioning on a generated column then clusters by it —
             // the hidden-partitioning ergonomic: users insert `ts`,
             // pruning works on `yr`.
-            val declaredF = ManifestTable.declaredSchema(dir, v)
+            val declaredF = cur.schema
               .map(org.apache.spark.sql.types.DataType.fromJson(_)
                 .asInstanceOf[org.apache.spark.sql.types.StructType])
             val dataG = declaredF
@@ -3726,7 +3689,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
               .flatMap(_.fields.filter(_.metadata.contains("identity.start")))
               .headOption.map { f =>
                 val step = f.metadata.getLong("identity.step")
-                val hw0 = ManifestTable.tableProperties(dir, v)
+                val hw0 = cur.properties
                   .get(GraftCatalog.IdentityProp + f.name).map(_.toLong)
                   .getOrElse(f.metadata.getLong("identity.start") - step)
                 (f, step, hw0)
@@ -3802,7 +3765,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // cluster with per-file blooms (point lookups prune). The
             // read path needs nothing new — partition pruning IS the
             // existing stats pruning over better-shaped files.
-            val partSpec = ManifestTable.tableProperties(dir, v)
+            val partSpec = cur.properties
               .get("graft.partitioning")
             // every insert harvests footer stats for EVERY column (the
             // Iceberg write-time default): SQL-created tables prune,
@@ -3813,14 +3776,14 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // per-file HLL register blob at insert time — the mergeable
             // sketch the scan's CBO column statistics union with zero
             // data I/O
-            val ndvCols = ManifestTable.tableProperties(dir, v)
+            val ndvCols = cur.properties
               .get("graft.write.ndv").toSeq
               .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
               .filter(allCols.contains)
             // declared SUM columns (`graft.write.sum` property) get a
             // per-file exact decimal sum in the same pass — the stat leg
             // that serves SUM/AVG aggregates from metadata
-            val sumCols = ManifestTable.tableProperties(dir, v)
+            val sumCols = cur.properties
               .get("graft.write.sum").toSeq
               .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
               .filter(allCols.contains)
@@ -3865,7 +3828,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                   // sorts each bucket file at insert time: the scan then
                   // reports the ordering and a co-bucketed sort-merge
                   // join runs with zero shuffles AND zero sorts
-                  val sortCols = ManifestTable.tableProperties(dir, v)
+                  val sortCols = cur.properties
                     .get("graft.write.sort").toSeq
                     .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
                   val shaped =
@@ -3915,9 +3878,7 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
             // identity frontier published in the SAME commit: the new
             // high-water is read from the staged files' own stats (covers
             // BY DEFAULT explicit values beyond the generated range)
-            val meta: Seq[String] = {
-              val base = ManifestTable.carriedMeta(dir, v)
-              idInfo match {
+            val base = idInfo match {
                 case Some((f, step, hw0)) =>
                   val fronts = staged.map(ManifestTable.parseEntry)
                     .flatMap(_.ranges.get(f.name))
@@ -3929,12 +3890,10 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                         .toLongExact
                       if (step > 0) math.max(hw0, b) else math.min(hw0, b)
                     }
-                  val key = s"#prop\t${GraftCatalog.IdentityProp}${f.name}\t"
-                  base.filterNot(_.startsWith(key)) :+ s"$key$frontier"
-                case None => base
+                  cur.withProp(GraftCatalog.IdentityProp + f.name, frontier.toString)
+                case None => cur
               }
-            }
-            done = (dnf, overwrite) match {
+            Some((dnf, overwrite) match {
               case (Some(conjs), _) =>
                 // FILTERED overwrite: delete exactly the matching rows.
                 // Files the stats REFUTE keep their manifest line
@@ -3952,12 +3911,11 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                 // files keep reconciling through the carried markers,
                 // and a condition on an evolved name conservatively hits
                 // files with no stat under it — sound, never wrong.
-                require(ManifestTable.policyLines(dir, v).isEmpty,
+                require(cur.policies.isEmpty,
                   s"filtered INSERT OVERWRITE on governed $dir refused: " +
                     "row deletion under a row-filter policy — use the " +
                     "ManifestTable API for governed maintenance")
-                val lines = ManifestTable.listLines(dir, v)
-                val (hit, untouched) = lines.partition { l =>
+                val (hit, untouched) = cur.files.partition { l =>
                   val e = ManifestTable.parseEntry(l)
                   conjs.exists(_.forall(StatsFilters.admits(_, e)))
                 }
@@ -3968,34 +3926,25 @@ private[sources] class ManifestSqlWriteBuilder(dir: String,
                     val cond = conjs.map(conj =>
                       conj.map(StatsFilters.toColumn).reduce(_ && _))
                       .reduce(_ || _)
-                    val fin = ManifestTable.finalNames(dir, v)
+                    val fin = cur.finalNames
                     val statsCols = hit.map(ManifestTable.parseEntry)
                       .flatMap(e => e.ranges.keys ++ e.strRanges.keys)
                       .map(c => fin.getOrElse(c, c)) // survivors carry
                       .distinct                      // evolved names
-                    val sv = ManifestTable.readFilesReconciled(s, dir, v,
+                    val sv = ManifestTable.readFilesReconciled(s, dir, cur,
                         hit.map(_.split('\t').head))
                       .filter(not(coalesce(cond, lit(false))))
                     ManifestTable.stageWithStats(s, dir, sv, statsCols)
                   }
-                val survivingNames =
-                  (untouched ++ survivors ++ staged).map(_.split('\t').head)
-                ManifestTable.commitMutate(dir,
-                  untouched ++ survivors ++ staged ++
-                    ManifestTable.carriedDvLines(dir, v,
-                      survivingNames.toSet) ++
-                    ManifestTable.renameLines(dir, v) ++ meta, v)
+                base.withFiles(untouched ++ survivors ++ staged) ->
+                  ManifestTable.Kind.Mutate
               case (None, true) => // whole-table overwrite (TRUNCATE shape)
-                ManifestTable.commitMutate(dir, staged ++ meta, v)
-              case (None, false) => ManifestTable.commit(dir,
-                ManifestTable.listLines(dir, v) ++ staged ++
-                  ManifestTable.dvLines(dir, v) ++
-                  ManifestTable.renameLines(dir, v) ++ meta, v)
-            }
-            attempt += 1 // lost the race: re-read, re-append (orphans stay)
-          }
-          if (!done) throw new IllegalStateException(
-            s"INSERT lost 10 commit races in $dir")
+                base.copy(files = staged, dvs = Nil, renames = Nil) ->
+                  ManifestTable.Kind.Mutate
+              case (None, false) =>
+                base.copy(files = cur.files ++ staged) -> ManifestTable.Kind.Data
+            })
+          } // a lost race re-reads and re-appends; staged orphans stay
         }
   }
 }
@@ -4078,7 +4027,7 @@ private[sources] class GraftDeltaOperation(dir: String,
     // legs skip old-generation rewrites (extractors find no column
     // under the evolved name), so metadata-served SUM/NDV honestly
     // declines on mixed tables until optimize re-harvests.
-    require(ManifestTable.policyLines(dir, v).isEmpty,
+    require(ManifestTable.snapshot(dir, v).policies.isEmpty,
       s"row-level SQL DML on governed $dir refused: the rewrite must see " +
         "raw rows (a masked rewrite would PERSIST masked values); use the " +
         "ManifestTable API for governed maintenance")
@@ -4104,14 +4053,14 @@ private[sources] class GraftDeltaOperation(dir: String,
     // applies at append time. Insert-side rows are the only ones that
     // carry data (deletes are (_file,_pos) keys), so recomputing there
     // covers the whole mutation surface.
+    val now = ManifestTable.head(dir)
     val genExprs: Seq[(Int,
         org.apache.spark.sql.catalyst.expressions.Expression)] = {
       import org.apache.spark.sql.catalyst.expressions.{Alias,
         AttributeReference, AttributeSeq, BindReferences}
       import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
         Project}
-      val v = ManifestTable.currentVersion(dir)
-      val genFields = ManifestTable.declaredSchema(dir, v)
+      val genFields = now.schema
         .map(org.apache.spark.sql.types.DataType.fromJson(_)
           .asInstanceOf[StructType])
         .toSeq.flatMap(_.fields)
@@ -4147,8 +4096,7 @@ private[sources] class GraftDeltaOperation(dir: String,
     // stamped — the same `recordBucket` gate the INSERT path applies
     val bucketBy: Option[(Int, String)] = {
       import org.apache.spark.sql.types._
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.partitioning")
+      now.properties.get("graft.partitioning")
         .map(GraftCatalog.partitionCols).collect {
           case (ids, Seq((n, c))) if ids.isEmpty &&
               // only types whose Murmur3 dispatch the writer reproduces
@@ -4170,19 +4118,13 @@ private[sources] class GraftDeltaOperation(dir: String,
     // rewrite survivors still need their sums (the writer's insert-side
     // spec intersects with the write schema itself; the rewrite side
     // matches against each file's own footer)
-    val sumCols: Seq[String] = {
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.write.sum").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    }
+    val sumCols: Seq[String] = now.properties.get("graft.write.sum").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     // declared `graft.write.ndv` columns: tasks register insert rows and
     // rewrite survivors into per-file HLL blobs, keeping CBO column NDV
     // metadata-served through row-level DML (same contract as the sums)
-    val ndvCols: Seq[String] = {
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.write.ndv").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    }
+    val ndvCols: Seq[String] = now.properties.get("graft.write.ndv").toSeq
+      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
     // deletes MUST stay file-clustered (one task owns every delete of a
     // file — two tasks rewriting the same file would race), so the bucket
     // leg can join the clustering only when every file in the snapshot is
@@ -4193,22 +4135,16 @@ private[sources] class GraftDeltaOperation(dir: String,
     // don't project data columns, so they keep the plain _file clustering.
     val distributeByBucket = cmd !=
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE &&
-      bucketBy.isDefined && {
-        val v = ManifestTable.currentVersion(dir)
-        val entries = ManifestTable.listLines(dir, v)
-          .map(ManifestTable.parseEntry)
-        entries.nonEmpty && entries.forall(_.bucket.isDefined)
-      }
+      bucketBy.isDefined &&
+        now.entries.nonEmpty && now.entries.forall(_.bucket.isDefined)
     // UNBUCKETED tables get the same insert spread through the `spread`
     // function: cluster by spread(w, _file, c) — a single expression that
     // is the file hash for delete rows (one task still owns every delete
     // of a file, whatever `c` holds) and a w-way data-column hash for
     // NULL-`_file` insert rows. `c` is the first hashable write column;
     // a schema with none keeps the documented one-task caveat.
-    val spreadWidth: Int = {
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.write.spread")
-        .map(_.toInt).getOrElse {
+    val spreadWidth: Int =
+      now.properties.get("graft.write.spread").map(_.toInt).getOrElse {
           // adaptive default (round 14): as wide as the session's shuffle
           // parallelism — on a 2000-partition cluster a bulk MERGE's
           // inserts fan across 2000 write tasks instead of a fixed 32,
@@ -4218,18 +4154,14 @@ private[sources] class GraftDeltaOperation(dir: String,
           math.max(32, org.apache.spark.sql.SparkSession.active
             .sessionState.conf.numShufflePartitions)
         }
-    }
     // AQE-style adaptivity at the SMALL end: the delta shuffle advertises
     // a target partition byte size, so adaptive execution COALESCES the
     // spread/bucket clustering for small row sets (a 3-row MERGE writes
     // one file, not `width` shards). Coalescing only ever MERGES whole
     // shuffle partitions — never splits one — so the one-task-owns-every-
     // delete-of-a-file invariant the clustering exists for is preserved.
-    val advisoryBytes: Long = {
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.write.targetFileBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    }
+    val advisoryBytes: Long = now.properties.get("graft.write.targetFileBytes")
+      .map(_.toLong).getOrElse(128L * 1024 * 1024)
     val spreadCol: Option[String] = {
       import org.apache.spark.sql.types._
       if (distributeByBucket || cmd ==
@@ -4252,9 +4184,9 @@ private[sources] class GraftDeltaOperation(dir: String,
     // markers the statement's scan merged — a concurrent MOR delete
     // landing mid-statement is the committer's rebase-refusal case,
     // not something to half-apply here
-    val pinV = if (baseVersion >= 0) baseVersion
-      else ManifestTable.currentVersion(dir)
-    val pinDvs = ManifestTable.dvEntries(dir, pinV)
+    val pin = if (baseVersion >= 0) ManifestTable.snapshot(dir, baseVersion)
+      else now
+    val pinDvs = pin.dvs
     val dvByPath: Map[String, Seq[(String, String)]] =
       if (pinDvs.isEmpty) Map.empty
       else pinDvs.flatMap(d => d.targets.toSeq.map(t =>
@@ -4266,11 +4198,10 @@ private[sources] class GraftDeltaOperation(dir: String,
     // physically carry the key (older or newer generation than the
     // marker's delete-time name)
     val dvAliases: Map[String, Seq[String]] =
-      if (pinDvs.isEmpty || ManifestTable.renames(dir, pinV).isEmpty)
-        Map.empty
+      if (pinDvs.isEmpty || pin.renames.isEmpty) Map.empty
       else pinDvs.map(_.col).distinct
         .filterNot(_ == DvKeyCache.PosCol)
-        .map(c => c -> ManifestTable.aliasFamily(dir, pinV, c)).toMap
+        .map(c => c -> pin.aliasFamily(c)).toMap
     // POSITIONAL DML (round 14, `graft.dml.mode = positional`): the
     // statement's deletes publish as `#dv … _pos …` markers over the
     // untouched data files instead of rewriting them — an arbitrary-
@@ -4278,11 +4209,8 @@ private[sources] class GraftDeltaOperation(dir: String,
     // the Iceberg position-delete shape. Requires the row-identity
     // names to really be metadata (a physical `_file`/`_pos` column
     // would collide with the ordinal bookkeeping).
-    val positionalDml: Boolean = {
-      val v = ManifestTable.currentVersion(dir)
-      ManifestTable.tableProperties(dir, v).get("graft.dml.mode")
-        .contains("positional")
-    }
+    val positionalDml: Boolean =
+      now.properties.get("graft.dml.mode").contains("positional")
     if (positionalDml)
       require(!tableSchema.fieldNames.exists(n => n == "_file" || n == "_pos"),
         s"positional DML on $dir refused: the table declares a physical " +
@@ -4377,25 +4305,21 @@ private[sources] class ManifestMetaTable(ident: String, dir: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => {
       val cur = pinned.getOrElse(ManifestTable.currentVersion(dir))
+      lazy val snap = ManifestTable.snapshot(dir, cur)
       val rows: Seq[Seq[Any]] = kind match {
         case "history" => (0 to cur)
           .filter(v => Files.exists(Paths.get(dir, f"manifest-v$v%08d.json")))
           .map { v =>
-            val entries = ManifestTable.listLines(dir, v)
-              .map(ManifestTable.parseEntry)
-            val k =
-              if (ManifestTable.isRewrite(dir, v)) "rewrite"
-              else if (ManifestTable.isMutate(dir, v)) "mutate"
-              else "data"
+            val at = ManifestTable.snapshot(dir, v)
+            val entries = at.entries
             val nRows =
               if (entries.nonEmpty && entries.forall(_.rows.isDefined) &&
-                  ManifestTable.dvLines(dir, v).isEmpty)
+                  at.dvs.isEmpty)
                 entries.flatMap(_.rows).sum
               else null
-            Seq(v, k, entries.size.toLong, nRows)
+            Seq(v, at.kind.name, entries.size.toLong, nRows)
           }
-        case "files" => ManifestTable.listLines(dir, cur)
-          .map(ManifestTable.parseEntry).map { e =>
+        case "files" => snap.entries.map { e =>
             val p = Paths.get(ManifestTable.dataPath(dir, e.name))
             Seq(e.name, e.rows.map(Long.box).orNull,
               if (Files.exists(p)) Files.size(p) else 0L)
@@ -4408,13 +4332,13 @@ private[sources] class ManifestMetaTable(ident: String, dir: String,
         // view before a backfill or a skew investigation, at metadata
         // cost — no scan, any table size.
         case "partitions" =>
-          val spec = ManifestTable.tableProperties(dir, cur)
+          val spec = snap.properties
             .getOrElse("graft.partitioning", throw new IllegalArgumentException(
               s"$$partitions requires a PARTITIONED BY table — $dir has " +
                 "no graft.partitioning property"))
           val (ids, bks) = GraftCatalog.partitionCols(spec)
           val tcs = GraftCatalog.timeCols(spec)
-          ManifestTable.listLines(dir, cur).map(ManifestTable.parseEntry)
+          snap.entries
             .groupBy(GraftCatalog.partitionKeyOf(_, ids, bks, tcs))
             .toSeq.sortBy(_._1).map { case (p, es) =>
               Seq(p, es.size.toLong,
@@ -4432,17 +4356,16 @@ private[sources] class ManifestMetaTable(ident: String, dir: String,
         case "branches" =>
           ManifestTable.branches(dir).map { b =>
             val bd = ManifestTable.branchDir(dir, b)
-            val bv = ManifestTable.currentVersion(bd)
-            val fork = ManifestTable.tableProperties(bd, bv)
+            val bs = ManifestTable.head(bd)
+            val fork = bs.properties
               .get(ManifestTable.BranchBaseProp).flatMap(_.toIntOption)
               .getOrElse(-1)
-            val es = ManifestTable.listLines(bd, bv)
-              .map(ManifestTable.parseEntry)
-            Seq(b, fork, bv, cur != fork, es.size.toLong,
+            val es = bs.entries
+            Seq(b, fork, bs.version, cur != fork, es.size.toLong,
               if (es.forall(_.rows.isDefined))
                 Long.box(es.flatMap(_.rows).sum) else null)
           }
-        case _ => ManifestTable.tableProperties(dir, cur).toSeq.sortBy(_._1)
+        case _ => snap.properties.toSeq.sortBy(_._1)
           .map { case (k, v) => Seq(k, v) }
       }
       val schemaNow = schema()
@@ -4539,8 +4462,9 @@ private[sources] class ChangesScanBuilder(dir: String, full: StructType,
       // version governs the whole range: the sync contract is "today's
       // governance over the history", never a leak of rows an older,
       // looser policy once allowed.
-      val governed = ChangesReaderFactory.bindPolicies(dir, end, full, required)
-      val aliases = RenameAliases.of(dir, end, full.fieldNames)
+      val endSnap = ManifestTable.snapshot(dir, end)
+      val governed = ChangesReaderFactory.bindPolicies(endSnap, full, required)
+      val aliases = RenameAliases.of(dir, endSnap.renames, full.fieldNames)
       val parts = (start to end).flatMap(v => ChangesDiff.forVersion(dir, v))
       val reqNow = required
       new Batch {
@@ -4597,10 +4521,11 @@ private[sources] case class ChangesFilePartition(file: String,
   * files + targeted files, never table size. */
 private[sources] object ChangesDiff {
   def forVersion(dir: String, v: Int): Seq[ChangesFilePartition] = {
-    if (v > 0 && ManifestTable.isRewrite(dir, v)) return Seq.empty
-    val prevDvs =
-      if (v == 0) Seq.empty else ManifestTable.dvEntries(dir, v - 1)
-    val nowDvs = ManifestTable.dvEntries(dir, v)
+    val snap = ManifestTable.snapshot(dir, v)
+    if (v > 0 && snap.kind == ManifestTable.Kind.Rewrite) return Seq.empty
+    val before = ManifestTable.snapshot(dir, v - 1)
+    val prevDvs = before.dvs
+    val nowDvs = snap.dvs
     def key(d: ManifestTable.DvEntry): (String, String) = (d.file, d.col)
     val newAt = nowDvs.filterNot(d => prevDvs.exists(p => key(p) == key(d)))
     val goneAt = prevDvs.filterNot(d => nowDvs.exists(p => key(p) == key(d)))
@@ -4608,12 +4533,8 @@ private[sources] object ChangesDiff {
         : Seq[(String, String)] =
       dvs.filter(_.targets.contains(n))
         .map(d => (ManifestTable.dataPath(dir, d.file), d.col))
-    val prev: Set[String] =
-      if (v == 0) Set.empty
-      else ManifestTable.listLines(dir, v - 1)
-        .map(ManifestTable.parseEntry(_).name).toSet
-    val now = ManifestTable.listLines(dir, v)
-      .map(ManifestTable.parseEntry(_).name)
+    val prev: Set[String] = before.names.toSet
+    val now = snap.names
     val nowSet = now.toSet
     val inserts = now.filterNot(prev)
       .map(n => ChangesFilePartition(
@@ -4655,11 +4576,11 @@ private[sources] object ChangesReaderFactory {
     * schema + bound row filter + bound mask projections over the pruned
     * DATA columns (the change columns are per-partition constants a
     * policy cannot reference). None on ungoverned tables. */
-  def bindPolicies(dir: String, v: Int, full: StructType,
+  def bindPolicies(snap: ManifestTable.Snapshot, full: StructType,
       required: StructType): Option[(StructType,
         Option[org.apache.spark.sql.catalyst.expressions.Expression],
         Seq[org.apache.spark.sql.catalyst.expressions.Expression])] = {
-    val pols = ManifestTable.policyLines(dir, v).map(_.split('\t'))
+    val pols = snap.policies
     if (pols.isEmpty) None
     else {
       def isChangeCol(n: String): Boolean =

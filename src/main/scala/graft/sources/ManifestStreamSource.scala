@@ -262,19 +262,15 @@ private[sources] class ChangesMicroBatchStream(dir: String, full: StructType,
   // masks, the same end-version contract as the batch feed. A policy
   // change mid-stream refuses loudly (per-batch check below) instead of
   // silently serving stale governance.
-  private val pinnedPolicy =
-    ManifestTable.policyLines(dir, ManifestTable.currentVersion(dir))
+  private val pinned = ManifestTable.head(dir)
   private val governed =
-    ChangesReaderFactory.bindPolicies(dir,
-      ManifestTable.currentVersion(dir), full, required)
+    ChangesReaderFactory.bindPolicies(pinned, full, required)
   // RENAMES cross the feed too (round 13): the chain pinned at stream
   // start reconciles every generation; a rename landing mid-stream
   // refuses per batch (below) — the consumer restarts to pick up the
   // evolved output schema
-  private val pinnedRenames =
-    ManifestTable.renameLines(dir, ManifestTable.currentVersion(dir))
   private val aliases =
-    RenameAliases.of(dir, ManifestTable.currentVersion(dir), full.fieldNames)
+    RenameAliases.of(dir, pinned.renames, full.fieldNames)
 
   // set ONLY by prepareForTriggerAvailableNow: an AvailableNow run drains
   // up to the version frozen at start; a ProcessingTime trigger re-reads
@@ -320,12 +316,11 @@ private[sources] class ChangesMicroBatchStream(dir: String, full: StructType,
     // versions is fine (the pinned policy governs those emissions, the
     // same end-version contract as the batch feed); only governance
     // CHANGING under the running stream refuses
-    require(ManifestTable.policyLines(dir,
-        ManifestTable.currentVersion(dir)) == pinnedPolicy,
+    val live = ManifestTable.head(dir)
+    require(live.policies == pinned.policies,
       s"streaming $$changes on $dir: the governance policy changed since " +
         "the stream started — restart the feed to pick up the new policy")
-    require(ManifestTable.renameLines(dir,
-        ManifestTable.currentVersion(dir)) == pinnedRenames,
+    require(live.renames == pinned.renames,
       s"streaming $$changes on $dir: a column rename landed since the " +
         "stream started — restart the feed to pick up the evolved schema")
     // the batch needs every manifest in [from, to] (from is the diff

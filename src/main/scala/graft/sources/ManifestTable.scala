@@ -83,26 +83,249 @@ object ManifestTable {
     if (vs.isEmpty) -1 else vs.max
   }
 
-  /** Raw manifest lines of version `v`: `name` or `name\t<file stats>`.
-    * `#`-prefixed marker lines (e.g. the [[commitRewrite]] tag) are
-    * metadata, not files, and are filtered here. Writers carry these lines
-    * forward verbatim so per-file stats survive later commits; readers
-    * that only need names use [[listFiles]]. */
-  def listLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    // one entry per line — no JSON library needed on the read path
-    val raw = body.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    val entries = raw.filterNot(_.startsWith("#"))
-    if (!raw.contains(SegMarker)) entries
-    // segmented manifest: the entries are SEGMENT summaries; resolve each
-    // segment file's lines (full resolve — pruning readers use
-    // [[pruneFilesSegmented]] to touch only admitted segments)
-    else entries.flatMap { sl =>
-      Files.readAllLines(segPath(dir, sl.split('\t').head)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+  /** Commit kind of a version, recorded as its manifest's first line. */
+  sealed abstract class Kind(val name: String, private[sources] val marker: String)
+  object Kind {
+    case object Data extends Kind("data", "")
+    case object Rewrite extends Kind("rewrite", "#rewrite")
+    case object Mutate extends Kind("mutate", "#mutate")
+  }
+
+  /** A governance policy evaluated at read time: a column mask (`col`
+    * set, `expr` replaces the column) or a row filter (`col` empty). */
+  final case class Policy(col: Option[String], expr: String) {
+    /** Whether the policy may reference column `name` — a conservative
+      * word-boundary match: false refusals possible, a policy silently
+      * losing its column never. */
+    def mentions(name: String): Boolean = {
+      val re = ("\\b" + java.util.regex.Pattern.quote(name) + "\\b").r
+      (col.toSeq :+ expr).exists(re.findFirstIn(_).isDefined)
     }
   }
+
+  /** One committed version of a table, parsed once from its manifest
+    * `manifest-v%08d.json` by [[snapshot]] — the only code that reads a
+    * manifest — and published by [[publish]], the only code that writes
+    * one. A manifest is UTF-8 text, one entry per line:
+    *
+    *  - line 1, optional: the commit [[Kind]] — `#rewrite` (a content-
+    *    preserving layout change: compaction, optimize) or `#mutate` (a
+    *    row-level change an append-only feed cannot express); absent for
+    *    a data commit.
+    *  - file lines `name[\t<stats>…]`: one data file each — its name
+    *    under `data/` (absolute for clone references) and its footer
+    *    stats ([[parseEntry]]). In a SEGMENTED manifest a `#segments`
+    *    line comes first and each entry instead names a segment file
+    *    under `meta/` with that segment's summary stats; the segment
+    *    holds the file lines ([[SegmentFiles]]).
+    *  - `#dv\t<key file>\t<key col>\t<target,…>[\t<target=count,…>]`:
+    *    a deletion vector ([[DvEntry]]).
+    *  - `#rename\t<from>\t<to>`: a column rename, in application order.
+    *  - `#policy\tmask\t<col>\t<sql>` / `#policy\tfilter\t<sql>`: a
+    *    governance [[Policy]].
+    *  - `#prop\t<key>\t<value>`: a table property.
+    *  - `#schema\t<json>`: the declared schema (an empty table's only
+    *    schema authority).
+    *  - `#epoch\t<queryId>\t<epochId>`: a streaming query's committed
+    *    high-water epoch (the exactly-once sink state).
+    *  - `#ts\t<millis>`: the commit instant, stamped by every publish.
+    *
+    * What a successor keeps: properties, policies, the declared schema
+    * and epochs carry through every commit that does not edit them —
+    * compaction and restore included. DVs and renames describe data
+    * files, so they carry with them: a commit that keeps the file list
+    * keeps both; a partial rewrite keeps each DV restricted to the
+    * targets still listed ([[withFiles]]); a full rewrite (compact,
+    * rebucket) materializes both away. `#ts` never carries. A commit
+    * builds its successor with `copy`, naming only the fields it
+    * changes; `version` is the base the successor publishes onto. */
+  final case class Snapshot(version: Int, kind: Kind = Kind.Data,
+      files: Seq[String] = Nil, dvs: Seq[DvEntry] = Nil,
+      renames: Seq[(String, String)] = Nil, policies: Seq[Policy] = Nil,
+      props: Seq[(String, String)] = Nil, schema: Option[String] = None,
+      epochs: Seq[(String, Long)] = Nil, ts: Option[Long] = None) {
+    lazy val entries: Seq[FileEntry] = files.map(parseEntry)
+    lazy val names: Seq[String] = files.map(nameOf)
+    lazy val properties: Map[String, String] = props.toMap
+    /** Each column's final name under the rename chain. */
+    lazy val finalNames: Map[String, String] = collapseRenames(renames)
+
+    /** The names a logical column has carried across the rename chain,
+      * evolved name first: stats of pre-rename files live under the OLD
+      * names, so alias-aware pruning looks the column up under every
+      * generation's name (each file records at most one of them). `col`
+      * may be given under any generation. */
+    def aliasFamily(col: String): Seq[String] = {
+      val evolved = finalNames.getOrElse(col, col)
+      evolved +: finalNames.collect { case (from, to) if to == evolved => from }.toSeq
+    }
+
+    def epoch(queryId: String): Option[Long] =
+      epochs.collectFirst { case (q, e) if q == queryId => e }
+    def withEpoch(queryId: String, epochId: Long): Snapshot =
+      copy(epochs = epochs.filterNot(_._1 == queryId) :+ (queryId -> epochId))
+    def withProp(key: String, value: String): Snapshot =
+      copy(props = props.filterNot(_._1 == key) :+ (key -> value))
+    def withoutProp(key: String): Snapshot =
+      copy(props = props.filterNot(_._1 == key))
+
+    /** This snapshot listing `lines`, each DV restricted to the targets
+      * still listed — a DV left targeting nothing drops (its doomed rows
+      * were materialized away). */
+    def withFiles(lines: Seq[String]): Snapshot = {
+      val listed = lines.iterator.map(nameOf).toSet
+      copy(files = lines, dvs = dvs.map { e =>
+        val t = e.targets.intersect(listed)
+        e.copy(targets = t, counts = e.counts.filter(kv => t(kv._1)))
+      }.filter(_.targets.nonEmpty))
+    }
+  }
+
+  private def nameOf(line: String): String = {
+    val i = line.indexOf('\t')
+    if (i < 0) line else line.substring(0, i)
+  }
+
+  /** A SEGMENTED snapshot's file lines: the manifest list's per-segment
+    * summary lines, resolved to the segments' file lines only when the
+    * whole list is asked for — pruning readers parse only the segments
+    * a summary admits ([[segmentedEntries]]). A commit that passes the
+    * list through untouched re-publishes the same segments; any edit
+    * yields a plain sequence, published flat. */
+  final class SegmentFiles private[sources] (dir: String,
+      val summaryLines: Seq[String])
+      extends scala.collection.immutable.AbstractSeq[String] {
+    lazy val summaries: Seq[FileEntry] = summaryLines.map(parseEntry)
+    def totalFiles: Long = summaryLines.flatMap(l =>
+      "__files=(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toLong)).sum
+    def segment(name: String): Seq[String] =
+      Files.readAllLines(segPath(dir, name)).asScala.toSeq
+        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+    private lazy val resolved = summaryLines.flatMap(l => segment(nameOf(l)))
+    def apply(i: Int): String = resolved(i)
+    def length: Int = resolved.length
+    def iterator: Iterator[String] = resolved.iterator
+  }
+
+  private val SegMarker = "#segments"
+  private val TsPrefix = "#ts\t"
+  private val DvPrefix = "#dv\t"
+  private val RenamePrefix = "#rename\t"
+  private val PolicyPrefix = "#policy\t"
+  private val PropPrefix = "#prop\t"
+  private val SchemaPrefix = "#schema\t"
+  private val EpochPrefix = "#epoch\t"
+
+  /** Load committed version `v` of `dir` (the empty snapshot for
+    * `v < 0`). A segmented manifest reads only its manifest list here. */
+  def snapshot(dir: String, v: Int): Snapshot =
+    if (v < 0) Snapshot(v)
+    else parse(dir, v,
+      new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8"))
+
+  /** The snapshot at the current head of `dir`. */
+  def head(dir: String): Snapshot = snapshot(dir, currentVersion(dir))
+
+  /** Parse a manifest body (grammar: [[Snapshot]]). Unknown `#` lines are
+    * ignored. */
+  private[sources] def parse(dir: String, v: Int, body: String): Snapshot = {
+    val raw = body.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+    def fields(prefix: String): Seq[Array[String]] =
+      raw.filter(_.startsWith(prefix)).map(_.split('\t'))
+    def value(prefix: String): Option[String] =
+      raw.find(_.startsWith(prefix)).map(_.stripPrefix(prefix))
+    val entries = raw.filterNot(_.startsWith("#"))
+    Snapshot(v,
+      kind = Seq(Kind.Rewrite, Kind.Mutate)
+        .find(k => raw.headOption.contains(k.marker)).getOrElse(Kind.Data),
+      files = if (raw.contains(SegMarker)) new SegmentFiles(dir, entries)
+        else entries,
+      dvs = raw.filter(_.startsWith(DvPrefix)).map(parseDvLine),
+      renames = fields(RenamePrefix).map(p => (p(1), p(2))),
+      policies = fields(PolicyPrefix).collect {
+        case Array(_, "mask", c, e) => Policy(Some(c), e)
+        case Array(_, "filter", e) => Policy(None, e)
+      },
+      props = fields(PropPrefix).map(p => p(1) -> (if (p.length > 2) p(2) else "")),
+      schema = value(SchemaPrefix),
+      epochs = fields(EpochPrefix).map(p => p(1) -> p(2).toLong),
+      ts = value(TsPrefix).map(_.toLong))
+  }
+
+  /** Render `s` as a manifest body of `kind`: the kind line first, then
+    * the file lines exactly as given, then the markers in one canonical
+    * order. */
+  private[sources] def render(s: Snapshot, kind: Kind): String =
+    (Seq(kind.marker).filter(_.nonEmpty) ++
+      (s.files match {
+        case sf: SegmentFiles => SegMarker +: sf.summaryLines
+        case fs => fs
+      }) ++
+      s.dvs.map(encodeDv) ++
+      s.renames.map { case (f, t) => s"$RenamePrefix$f\t$t" } ++
+      s.policies.map {
+        case Policy(Some(c), e) => s"${PolicyPrefix}mask\t$c\t$e"
+        case Policy(None, e) => s"${PolicyPrefix}filter\t$e"
+      } ++
+      s.props.map { case (k, v) => s"$PropPrefix$k\t$v" } ++
+      s.schema.map(SchemaPrefix + _) ++
+      s.epochs.map { case (q, e) => s"$EpochPrefix$q\t$e" } ++
+      s.ts.map(TsPrefix + _)).mkString("\n")
+
+  /** Atomically publish `next` as version `next.version + 1`, tagged
+    * `kind`. True on success, false if another writer won the race. */
+  def publish(dir: String, next: Snapshot, kind: Kind): Boolean = {
+    Files.createDirectories(Paths.get(dir, "data"))
+    // every commit records its own instant as a `#ts` marker line —
+    // TIMESTAMP AS OF resolves from this, not from file mtimes, which a
+    // directory copy/restore/backup silently rewrites; each version's
+    // marker is its own commit time
+    val body = render(next.copy(ts = Some(System.currentTimeMillis())), kind)
+    try {
+      Files.write(manifestPath(dir, next.version + 1), body.getBytes("UTF-8"),
+        StandardOpenOption.CREATE_NEW) // atomic CAS: fails if v+1 exists
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+  }
+
+  /** Commit attempts per operation: every lost race means another writer
+    * committed, so ten losses in a row is contention to report, not to
+    * absorb. */
+  private val MaxCommitAttempts = 10
+
+  /** The one optimistic-concurrency retry loop: run `attempt` until it
+    * yields a result — `None` means it lost its compare-and-swap and
+    * re-runs against the winner's state. */
+  private[sources] def retryCas[A](what: String, where: String)(
+      attempt: => Option[A]): A = {
+    var n = 0
+    while (n < MaxCommitAttempts) {
+      attempt match {
+        case Some(a) => return a
+        case None => n += 1
+      }
+    }
+    throw new IllegalStateException(
+      s"$what lost $MaxCommitAttempts commit races in $where")
+  }
+
+  /** Commit through [[retryCas]]: each attempt loads the head and `step`
+    * either proposes its successor (published with the given kind) or
+    * returns None — nothing to commit. Staged files of a lost attempt
+    * stay invisible orphans. Returns the resulting head version. */
+  def commitLoop(dir: String, what: String)(
+      step: Snapshot => Option[(Snapshot, Kind)]): Int =
+    retryCas(what, dir) {
+      val cur = head(dir)
+      step(cur) match {
+        case None => Some(cur.version)
+        case Some((next, kind)) =>
+          if (publish(dir, next, kind)) Some(next.version + 1) else None
+      }
+    }
+
+  /** Raw file lines of version `v`: `name` or `name\t<file stats>`. */
+  def listLines(dir: String, v: Int): Seq[String] = snapshot(dir, v).files
 
   // ---------------------------------------------------------------------
   // Split manifests + manifest list (the Iceberg metadata layout, applied
@@ -120,33 +343,21 @@ object ManifestTable {
   // crashed segmented commit leaves only invisible orphans.
   // ---------------------------------------------------------------------
 
-  private[sources] val SegMarker = "#segments"
-
   private def segPath(dir: String, name: String): Path =
     Paths.get(dir, "meta", name)
-
-  /** Segment names referenced by version `v` (empty for flat manifests). */
-  def listSegmentNames(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    if (!raw.contains(SegMarker)) Seq.empty
-    else raw.filterNot(_.startsWith("#")).map(_.split('\t').head)
-  }
 
   /** Publish version `expected + 1` as a SEGMENTED manifest: shard `lines`
     * into segments of `segmentSize`, write each under `meta/` with a
     * unique name, and CAS a manifest list of per-segment summaries (range
     * union per stats column, `__rows` and `__files` totals). Same
     * atomicity as [[commit]]; a lost race leaves orphan segments that
-    * [[vacuum]] collects. `kind` carries the commit marker ("", "#rewrite"
-    * or "#mutate"). `clusterBy` names a stats column to SORT the file
+    * [[vacuum]] collects. `clusterBy` names a stats column to SORT the file
     * lines by (recorded min) before sharding — without it, segment
     * summaries span whatever ranges the staging order interleaved and
     * nothing prunes (the reason Iceberg sorts manifest entries); file
     * order inside a manifest is not semantic, so this is pure layout. */
   def commitSegmented(dir: String, lines: Seq[String], expected: Int,
-      segmentSize: Int = 1000, kind: String = "",
+      segmentSize: Int = 1000, kind: Kind = Kind.Data,
       clusterBy: String = ""): Boolean = {
     require(segmentSize > 0, "segmentSize must be positive")
     Files.createDirectories(Paths.get(dir, "meta"))
@@ -208,9 +419,8 @@ object ManifestTable {
           s"$c=S:${hexEncode(lo)}:${hexEncode(hi)}" }.mkString(";")
       s"$name$rangeKv$bloomKv$hllKv$strKv$rowsKv\t__files=${es.size}"
     }.toSeq
-    val body = (Seq(kind).filter(_.nonEmpty) ++ (SegMarker +: summaries))
-      .mkString("\n")
-    commitBody(dir, body, expected)
+    publish(dir, Snapshot(expected,
+      files = new SegmentFiles(dir, summaries)), kind)
   }
 
   /** Bitwise-OR union of same-geometry Bloom sketches (format:
@@ -248,28 +458,9 @@ object ManifestTable {
     * second element is the driver's actual parse cost. */
   def pruneFilesSegmentedForKeys(dir: String, v: Int, col: String,
       keys: Seq[Long]): (Seq[String], Int, Int, Long) = {
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val summaryLines = raw.filterNot(_.startsWith("#"))
-    val filesRe = "__files=(\\d+)".r
-    val totalFiles = summaryLines
-      .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
-    val summaries = summaryLines.map(parseEntry)
-    def admit(e: FileEntry): Boolean = {
-      val rangeOk = e.ranges.get(col).forall(r =>
-        keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max))
-      val bloomOk = e.blooms.get(col).forall(bf =>
-        keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      rangeOk && bloomOk
-    }
-    val admitted = summaries.filter(admit)
-    val kept = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry).filter(admit).map(_.name)
-    }
-    (kept, admitted.size, summaries.size, totalFiles)
+    val (kept, read, total, files) =
+      segmented(dir, v, mayHoldKeys(_, Seq(col), keys))
+    (kept.map(_.name), read, total, files)
   }
 
   /** Resolve a SEGMENTED snapshot's file entries while PARSING only the
@@ -280,25 +471,21 @@ object ManifestTable {
     * Returns None for flat manifests; otherwise (admitted file entries,
     * segments read, segments total, files total) — the driver's actual
     * metadata cost made visible. */
-  def segmentedEntries(dir: String, v: Int, admit: FileEntry => Boolean)
-      : Option[(Seq[FileEntry], Int, Int, Long)] = {
-    if (v < 0) return None
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    if (!raw.contains(SegMarker)) return None
-    val summaryLines = raw.filterNot(_.startsWith("#"))
-    val filesRe = "__files=(\\d+)".r
-    val totalFiles = summaryLines
-      .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
-    val summaries = summaryLines.map(parseEntry)
-    val admitted = summaries.filter(admit)
-    val entries = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry).filter(admit)
+  def segmentedEntries(snap: Snapshot, admit: FileEntry => Boolean)
+      : Option[(Seq[FileEntry], Int, Int, Long)] =
+    snap.files match {
+      case sf: SegmentFiles =>
+        val admitted = sf.summaries.filter(admit)
+        val entries = admitted.flatMap(s =>
+          sf.segment(s.name).map(parseEntry).filter(admit))
+        Some((entries, admitted.size, sf.summaries.size, sf.totalFiles))
+      case _ => None
     }
-    Some((entries, admitted.size, summaries.size, totalFiles))
-  }
+
+  private def segmented(dir: String, v: Int, admit: FileEntry => Boolean)
+      : (Seq[FileEntry], Int, Int, Long) =
+    segmentedEntries(snapshot(dir, v), admit).getOrElse(throw new IllegalArgumentException(
+      s"requirement failed: v$v of $dir is not a segmented manifest"))
 
   /** [[estimateNdv]] at SEGMENT granularity: union the per-segment HLL
     * blobs of the range-admitted segment summaries — driver cost
@@ -308,10 +495,12 @@ object ManifestTable {
   def estimateNdvSegmented(dir: String, v: Int, col: String,
       lo: BigDecimal, hi: BigDecimal, numStdDev: Int = 2): (Double, Double) = {
     import org.apache.datasketches.hll.{HllSketch, Union}
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val admitted = raw.filterNot(_.startsWith("#")).map(parseEntry)
+    val summaries = snapshot(dir, v).files match {
+      case sf: SegmentFiles => sf.summaries
+      case _ => throw new IllegalArgumentException(
+        s"requirement failed: v$v of $dir is not a segmented manifest")
+    }
+    val admitted = summaries
       .filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
     require(admitted.nonEmpty && admitted.forall(_.hlls.contains(col)),
       s"estimateNdvSegmented needs an HLL sketch for '$col' on every admitted segment")
@@ -327,39 +516,14 @@ object ManifestTable {
     * driver's actual metadata cost, the proof the resolve is bounded. */
   def pruneFilesSegmented(dir: String, v: Int, col: String,
       lo: BigDecimal, hi: BigDecimal): (Seq[String], Int, Int, Long) = {
-    val raw = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    require(raw.contains(SegMarker), s"v$v of $dir is not a segmented manifest")
-    val summaryLines = raw.filterNot(_.startsWith("#"))
-    val filesRe = "__files=(\\d+)".r
-    val totalFiles = summaryLines
-      .flatMap(l => filesRe.findFirstMatchIn(l).map(_.group(1).toLong)).sum
-    val summaries = summaryLines.map(parseEntry)
-    val admitted = summaries.filter(
+    val (kept, read, total, files) = segmented(dir, v,
       _.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
-    val kept = admitted.flatMap { s =>
-      Files.readAllLines(segPath(dir, s.name)).asScala
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(parseEntry)
-        .filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
-        .map(_.name)
-    }
-    (kept, admitted.size, summaries.size, totalFiles)
-  }
-
-  /** True if version `v` is a REWRITE commit (compaction / optimize): its
-    * file list changed but its DATA did not — incremental consumers skip
-    * it entirely instead of re-reading rewritten files. */
-  def isRewrite(dir: String, v: Int): Boolean = {
-    if (v < 0) return false
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    body.split('\n').headOption.exists(_.trim == "#rewrite")
+    (kept.map(_.name), read, total, files)
   }
 
   /** Data files of version `v` (relative names under `data/`, or absolute
     * paths for files referenced from a SOURCE table by [[cloneTable]]). */
-  def listFiles(dir: String, v: Int): Seq[String] =
-    listLines(dir, v).map(_.split('\t').head)
+  def listFiles(dir: String, v: Int): Seq[String] = snapshot(dir, v).names
 
   /** Resolve a manifest file name to its on-disk location: relative names
     * live under this table's `data/`; absolute names (shallow clones)
@@ -378,76 +542,23 @@ object ManifestTable {
   def readVersion(s: SparkSession, dir: String, v: Int): DataFrame = {
     require(v >= 0 && Files.exists(manifestPath(dir, v)),
       s"no committed snapshot v$v in $dir")
+    val snap = snapshot(dir, v)
     // a zero-file snapshot (fresh CREATE TABLE, unconditional DELETE) is a
     // legal empty table: serve the declared schema if one was recorded
-    if (listFiles(dir, v).isEmpty)
-      return declaredSchema(dir, v)
+    if (snap.files.isEmpty)
+      return snap.schema
         .map(j => s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.DataType.fromJson(j)
             .asInstanceOf[org.apache.spark.sql.types.StructType]))
         .getOrElse(s.emptyDataFrame)
-    readFilesReconciled(s, dir, v, listFiles(dir, v))
+    readFilesReconciled(s, dir, snap, snap.names)
   }
 
   /** Atomically publish version `expected + 1` = `files`. True on success,
     * false if another writer won the race (caller re-reads and retries). */
   def commit(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, files.mkString("\n"), expected)
-
-  /** [[commit]] tagged as a DATA-INVARIANT rewrite (compaction, optimize):
-    * snapshot readers see the new file list as usual, but incremental
-    * consumers ([[readChanges]], the streaming source) skip the version —
-    * the rows didn't change, only their layout, so "re-bootstrap on
-    * compaction" stops being part of the CDC contract. */
-  def commitRewrite(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, ("#rewrite" +: files).mkString("\n"), expected)
-
-  /** [[commit]] tagged as a ROW-LEVEL MUTATION (delete, update): the data
-    * changed in a way an append-only change feed cannot express, so
-    * incremental consumers crossing this version fail EXPLICITLY and must
-    * re-bootstrap — emitting the rewritten survivors as "new rows" would
-    * silently duplicate them downstream. */
-  def commitMutate(dir: String, files: Seq[String], expected: Int): Boolean =
-    commitBody(dir, ("#mutate" +: files).mkString("\n"), expected)
-
-  /** True if version `v` is a row-level mutation commit. */
-  def isMutate(dir: String, v: Int): Boolean = {
-    if (v < 0) return false
-    val body = new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-    body.split('\n').headOption.exists(_.trim == "#mutate")
-  }
-
-  private def commitBody(dir: String, body: String, expected: Int): Boolean = {
-    Files.createDirectories(Paths.get(dir, "data"))
-    val target = manifestPath(dir, expected + 1)
-    // every commit records its own instant as a `#ts` marker line —
-    // TIMESTAMP AS OF resolves from this, not from file mtimes, which a
-    // directory copy/restore/backup silently rewrites. Appended HERE (the
-    // one choke point all commit kinds pass through) and never carried
-    // forward: each version's marker is its own commit time.
-    val stamped =
-      (if (body.isEmpty) "" else body + "\n") +
-        s"$TsPrefix${System.currentTimeMillis()}"
-    try {
-      Files.write(target, stamped.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW) // atomic CAS: fails if v+1 exists
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-  }
-
-  private val TsPrefix = "#ts\t"
-
-  /** The commit instant (epoch millis) version `v` recorded at publish
-    * time, if the manifest carries a `#ts` marker (commits predating the
-    * marker resolve by file mtime at the call site — the degraded legacy
-    * rule). */
-  def commitInstantMillis(dir: String, v: Int): Option[Long] = {
-    if (v < 0 || !Files.exists(manifestPath(dir, v))) return None
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).find(_.startsWith(TsPrefix))
-      .map(_.stripPrefix(TsPrefix).toLong)
-  }
+    publish(dir, Snapshot(expected, files = files), Kind.Data)
 
   /** Stage `df` as immutable uniquely-named parquet files under `data/`
     * WITHOUT publishing them — they stay invisible orphans until a manifest
@@ -535,11 +646,8 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed snapshot in $dir")
     (0 to cur).map { v =>
-      val entries = listLines(dir, v).map(parseEntry)
-      val kind =
-        if (isRewrite(dir, v)) "rewrite"
-        else if (isMutate(dir, v)) "mutate"
-        else "data"
+      val snap = snapshot(dir, v)
+      val entries = snap.entries
       // POSITIONAL markers record exact doomed ordinals (round 14) and
       // KEYED markers their delete-time doomed-live counts (round 15),
       // so live = rows − doomed summed over still-listed targets — the
@@ -547,7 +655,7 @@ object ManifestTable {
       // predating count recording makes the row count unknowable from
       // metadata (how many keys actually hit is a data question) —
       // report unknown, never a guess.
-      val dvs = dvEntries(dir, v)
+      val dvs = snap.dvs
       val rows =
         if (entries.isEmpty || entries.exists(_.rows.isEmpty)) None
         else if (dvs.isEmpty) Some(entries.flatMap(_.rows).sum)
@@ -561,7 +669,7 @@ object ManifestTable {
               m.iterator.collect { case (t, n) if names(t) => n }.sum))
             .toOption.flatten
         }
-      (v, kind, entries.size.toLong, rows)
+      (v, snap.kind.name, entries.size.toLong, rows)
     }.toDF("version", "kind", "n_files", "n_rows")
   }
 
@@ -575,18 +683,12 @@ object ManifestTable {
     * came back"), so consumers crossing it must re-bootstrap — the same
     * honesty contract as delete/update. Requires `v` to still be within
     * the vacuum horizon. */
-  def restore(dir: String, v: Int, maxRetries: Int = 10): Int = {
+  def restore(dir: String, v: Int): Int = {
     require(v >= 0 && Files.exists(manifestPath(dir, v)),
       s"no committed snapshot v$v in $dir (vacuumed?)")
-    val lines = listLines(dir, v) ++ dvLines(dir, v) ++
-      renameLines(dir, v) ++ carriedMeta(dir, v)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val cur = currentVersion(dir)
-      if (commitMutate(dir, lines, cur)) return cur + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(s"restore lost $maxRetries commit races in $dir")
+    val old = snapshot(dir, v)
+    commitLoop(dir, "restore")(cur =>
+      Some(old.copy(version = cur.version) -> Kind.Mutate))
   }
 
   /** SHALLOW CLONE — a zero-copy table copy: the clone's v0 manifest
@@ -601,22 +703,19 @@ object ManifestTable {
     * SOURCE can collect files a clone still references — clones live
     * inside the source's retention horizon. */
   def cloneTable(srcDir: String, dstDir: String): Int = {
-    val v = currentVersion(srcDir)
-    require(v >= 0, s"no committed snapshot to clone in $srcDir")
-    val lines = listLines(srcDir, v).map { l =>
-      val parts = l.split('\t')
-      val abs = Paths.get(dataPath(srcDir, parts.head)).toAbsolutePath.toString
-      (abs +: parts.tail).mkString("\t")
-    }
+    val src = head(srcDir)
+    require(src.version >= 0, s"no committed snapshot to clone in $srcDir")
     def abs(n: String) = Paths.get(dataPath(srcDir, n)).toAbsolutePath.toString
-    // deletion vectors clone too: DV file, targets, and recorded
-    // doomed-live counts re-point into the source by absolute path,
-    // same as the data references
-    val dvs = dvEntries(srcDir, v).map(e =>
-      encodeDv(DvEntry(abs(e.file), e.col, e.targets.map(abs),
-        e.counts.map { case (t, n) => abs(t) -> n })))
-    require(commit(dstDir, lines ++ dvs ++ renameLines(srcDir, v) ++
-        carriedMeta(srcDir, v), -1),
+    // data references AND deletion vectors (DV file, targets, recorded
+    // doomed-live counts) re-point into the source by absolute path
+    val lines = src.files.map { l =>
+      val parts = l.split('\t')
+      (abs(parts.head) +: parts.tail).mkString("\t")
+    }
+    val dvs = src.dvs.map(e => DvEntry(abs(e.file), e.col, e.targets.map(abs),
+      e.counts.map { case (t, n) => abs(t) -> n }))
+    require(publish(dstDir, src.copy(version = -1, files = lines, dvs = dvs),
+        Kind.Data),
       s"clone target $dstDir is not empty")
     // register the clone AT THE SOURCE (unique marker file — no write
     // race) so the source's vacuum knows external readers reference its
@@ -649,11 +748,11 @@ object ManifestTable {
 
   private[sources] val BranchBaseProp = "graft.branch.base"
 
-  /** Exact-KEY match for the branch's private fork-point property line —
-    * a whole-line `contains` would also drop any property whose VALUE
-    * happens to contain the key text (ADVICE r16). */
-  private def isBranchBaseLine(l: String): Boolean =
-    l.startsWith(s"$PropPrefix$BranchBaseProp\t")
+  /** The fork-point version recorded on branch snapshot `b` of `bd`. */
+  private def forkPoint(bd: String, b: Snapshot): Int =
+    b.properties.get(BranchBaseProp).flatMap(_.toIntOption).getOrElse(
+      throw new IllegalStateException(
+        s"$bd carries no fork-point property — not a branch"))
 
   private def validRefName(name: String): Boolean =
     name.nonEmpty && name.forall(ch => ch.isLetterOrDigit || ch == '_' ||
@@ -718,11 +817,9 @@ object ManifestTable {
     * new main version. */
   def fastForward(dir: String, name: String): Int = {
     val bd = branchDir(dir, name)
-    val bv = currentVersion(bd)
-    require(bv >= 0, s"no branch '$name' on $dir")
-    val base = tableProperties(bd, bv).get(BranchBaseProp)
-      .flatMap(_.toIntOption).getOrElse(throw new IllegalStateException(
-        s"$bd carries no fork-point property — not a branch"))
+    val b = head(bd)
+    require(b.version >= 0, s"no branch '$name' on $dir")
+    val base = forkPoint(bd, b)
     def refuseDiverged(): Nothing = throw new IllegalStateException(
       s"fast-forward of branch '$name' refused: $dir advanced past its " +
         s"fork point v$base — re-cut the branch (or abandon it); a " +
@@ -732,106 +829,72 @@ object ManifestTable {
     // publish: the branch was audited against the same CONTENT, and the
     // publish replaces the file list wholesale anyway (main's compaction
     // work is discarded, never its data). Any data/mutate commit refuses.
-    val headNow = currentVersion(dir)
+    def onlyRewritesSince(m: Snapshot): Boolean =
+      (base + 1 to m.version).forall(v =>
+        Files.exists(manifestPath(dir, v)) && snapshot(dir, v).kind == Kind.Rewrite)
     val pub = new BranchPublish(dir, bd)
-    val bLines = listLines(bd, bv)
-    val bDvRaw = dvEntries(bd, bv)
-    def foldDv(e: DvEntry): DvEntry = DvEntry(pub.fold(e.file), e.col,
-      e.targets.map(pub.fold),
-      e.counts.map { case (t, c) => pub.fold(t) -> c })
-    if (headNow != base) {
+    import pub.{fold, linkLocal, unlink}
+    // DELETION-VECTOR markers publish with the branch (round 15 — WAP
+    // composes with row-level DML): targets + recorded counts fold
+    // exactly as the data lines do, so they keep matching manifest names
+    // on main. Positions `_file` values are basenames (invariant under
+    // the move) and keyed parquets hold values, never paths — nothing
+    // inside a marker file needs rewriting. Renames carry name pairs.
+    val dvs = b.dvs.map(e => DvEntry(fold(e.file), e.col,
+      e.targets.map(fold), e.counts.map { case (t, c) => fold(t) -> c }))
+    val main0 = head(dir)
+    if (main0.version != base) {
       // CRASHED-RETIRE RE-RUN: the publish replaced main's file list
       // wholesale, so if main's head IS the branch head (positive
       // signal: the branch's unique LOCAL names are on main) the prior
       // run already published — retire and return instead of refusing
       // against our own commit
-      val bLocal = bLines.map(_.split('\t').head)
-        .filterNot(_.startsWith("/")).toSet
-      val mainNamesNow = listLines(dir, headNow).map(_.split('\t').head).toSet
-      val appliedAlready = bLocal.nonEmpty &&
-        bLines.map(l => pub.fold(l.split('\t').head)).toSet == mainNamesNow &&
-        dvEntries(dir, headNow).map(encodeDv).toSet ==
-          bDvRaw.map(e => encodeDv(foldDv(e))).toSet
+      val appliedAlready = b.names.exists(!_.startsWith("/")) &&
+        b.names.map(fold).toSet == main0.names.toSet &&
+        main0.dvs.toSet == dvs.toSet
       if (appliedAlready) {
         try dropBranch(dir, name) catch { case _: Exception => () }
-        return headNow
+        return main0.version
       }
-      val onlyRewrites = (base + 1 to headNow).forall(v =>
-        Files.exists(manifestPath(dir, v)) && isRewrite(dir, v))
-      if (!onlyRewrites) refuseDiverged()
-      require(dvLines(dir, headNow).isEmpty && renameLines(dir, headNow).isEmpty,
+      if (!onlyRewritesSince(main0)) refuseDiverged()
+      require(main0.dvs.isEmpty && main0.renames.isEmpty,
         s"fast-forward of '$name' refused: markers appeared on $dir " +
           "since the fork — compact first")
     }
     // branch-local files LINK (copy on filesystems without hard links)
     // into main — the branch keeps its own reference until dropBranch, so
-    // a crash anywhere in the publish window leaves BOTH sides intact;
-    // the old move-based publish stranded the branch (its manifest
-    // referenced files no longer in its data dir) with no repair path.
+    // a crash anywhere in the publish window leaves BOTH sides intact.
     // One fold for every name the publish carries: a reference back into
     // main's own data dir becomes the relative name, a branch-LOCAL file
     // links into main's data dir under its unique name, anything else
     // stays an absolute reference (see [[BranchPublish]]).
-    import pub.{fold, linkLocal, unlink}
     try {
-      val lines = bLines.map { l =>
+      val lines = b.files.map { l =>
         val parts = l.split('\t')
-        val n = parts.head
-        linkLocal(n)
-        (fold(n) +: parts.tail).mkString("\t")
+        linkLocal(parts.head)
+        (fold(parts.head) +: parts.tail).mkString("\t")
       }
-      // DELETION-VECTOR markers publish with the branch (round 15 —
-      // WAP composes with row-level DML): the staged key/positions
-      // parquet links like any branch-local file, and the marker's
-      // targets + recorded counts fold exactly as the data lines do, so
-      // they keep matching manifest names on main. Positions `_file`
-      // values are basenames (invariant under the move) and keyed
-      // parquets hold values, never paths — nothing inside a marker
-      // file needs rewriting. RENAME markers carry name pairs, no
-      // paths: verbatim.
-      val dvFolded = bDvRaw.map { e =>
-        linkLocal(e.file)
-        encodeDv(foldDv(e))
-      }
+      b.dvs.foreach(e => linkLocal(e.file))
       // the branch's evolved metadata (schema changes, properties, tags)
-      // publishes with it — minus its private fork-point marker
-      val meta = carriedMeta(bd, bv).filterNot(isBranchBaseLine)
-      // publish as a MUTATE commit: relative to main's head the branch
-      // may remove or rewrite rows, which an append-only feed cannot
-      // express — incremental consumers re-bootstrap, the honest default
-      var attempt = 0
-      var committed = -1
-      while (committed < 0) {
-        val head = currentVersion(dir)
-        if (head != base) {
-          // re-validate under the loop: only rewrite commits may land
-          // between the pre-check and the CAS
-          val onlyRewrites = (base + 1 to head).forall(v =>
-            Files.exists(manifestPath(dir, v)) && isRewrite(dir, v))
-          if (!onlyRewrites ||
-              dvLines(dir, head).nonEmpty || renameLines(dir, head).nonEmpty) {
-            unlink(); refuseDiverged()
-          }
-        }
-        if (commitMutate(dir, lines ++ dvFolded ++
-            renameLines(bd, bv) ++ meta, head)) {
-          committed = head + 1; pub.published = true
-        }
-        else {
-          attempt += 1
-          if (attempt >= 10) { unlink(); refuseDiverged() }
-        }
+      // publishes with it — minus its private fork-point property — as a
+      // MUTATE commit: relative to main's head the branch may remove or
+      // rewrite rows, which an append-only feed cannot express
+      val next = b.withoutProp(BranchBaseProp).copy(files = lines, dvs = dvs)
+      val committed = commitLoop(dir, s"fast-forward of branch '$name'") { m =>
+        // re-validate under the loop: only rewrite commits may land
+        // between the pre-check and the CAS
+        if (m.version != base && (!onlyRewritesSince(m) ||
+            m.dvs.nonEmpty || m.renames.nonEmpty)) refuseDiverged()
+        Some(next.copy(version = m.version) -> Kind.Mutate)
       }
       // past this point the publish is COMMITTED: main's manifest now
       // references the linked files, so no failure (including a
       // dropBranch I/O error — the retire step is best-effort; a
       // leftover branch is benign, re-droppable) may ever unlink them
+      pub.published = true
       try dropBranch(dir, name) catch { case _: Exception => () }
       committed
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        unlink(); throw e
-    }
+    } catch { case e: Throwable => unlink(); throw e }
   }
 
   /** THREE-WAY BRANCH MERGE (round 16) — the step past [[fastForward]]'s
@@ -933,81 +996,59 @@ object ManifestTable {
 
   def mergeBranch(dir: String, name: String): Int = {
     val bd = branchDir(dir, name)
-    val bv = currentVersion(bd)
-    require(bv >= 0, s"no branch '$name' on $dir")
-    val base = tableProperties(bd, bv).get(BranchBaseProp)
-      .flatMap(_.toIntOption).getOrElse(throw new IllegalStateException(
-        s"$bd carries no fork-point property — not a branch"))
+    val b = head(bd)
+    require(b.version >= 0, s"no branch '$name' on $dir")
+    val base = forkPoint(bd, b)
     require(Files.exists(manifestPath(dir, base)),
       s"merge of branch '$name' refused: fork snapshot v$base of $dir " +
         "was expired — re-cut the branch")
     val pub = new BranchPublish(dir, bd)
     import pub.{fold, linkLocal, unlink}
-    def nameOf(l: String): String = l.split('\t').head
 
     // the branch's file-level delta vs the fork snapshot, names folded
     // back to main-relative
-    val baseNames = listLines(dir, base).map(nameOf).toSet
-    val bLines = listLines(bd, bv).map { l =>
+    val fork = snapshot(dir, base)
+    val baseNames = fork.names.toSet
+    val bLines = b.files.map { l =>
       val p = l.split('\t'); (fold(p.head) +: p.tail).mkString("\t")
     }
     val bNames = bLines.map(nameOf).toSet
     val branchAdded = bLines.filterNot(l => baseNames.contains(nameOf(l)))
     val branchRemoved = baseNames -- bNames
-    val baseDvs = dvEntries(dir, base)
-    val baseDvEnc = baseDvs.map(encodeDv).toSet
-    val bDvFolded = dvEntries(bd, bv).map(e => DvEntry(fold(e.file), e.col,
+    val baseDvs = fork.dvs.toSet
+    val bDvs = b.dvs.map(e => DvEntry(fold(e.file), e.col,
       e.targets.map(fold), e.counts.map { case (t, c) => fold(t) -> c }))
-    val bDvEnc = bDvFolded.map(encodeDv).toSet
     // an inherited marker may only vanish WITH its targets (a branch COW
     // rewrite materialized the doomed rows away — the removal then goes
     // through the file-conflict rule); a marker rewrite that leaves its
     // targets in place (consolidation) would double-apply against main's
     // surviving copies after the merge, so it refuses
-    require(baseDvs.forall(e => bDvEnc.contains(encodeDv(e)) ||
+    require(fork.dvs.forall(e => bDvs.contains(e) ||
         !e.targets.exists(bNames.contains)),
       s"merge of branch '$name' refused: the branch rewrote inherited " +
         "deletion-vector markers (consolidation?) — merging would " +
         "double-apply them against main's copies; fastforward or re-cut")
-    val branchNewDvs = bDvFolded.filterNot(e => baseDvEnc.contains(encodeDv(e)))
+    val branchNewDvs = bDvs.filterNot(baseDvs.contains)
     val branchTouched = branchRemoved ++
       branchNewDvs.flatMap(_.targets).filter(baseNames.contains)
-    // metadata compares EXCLUDE streaming #epoch high-waters: an epoch
-    // watermark landing on either side is a sink progress marker, not a
-    // metadata edit (counting it would spuriously block every merge into
-    // a streaming-fed table); epochs merge per-queryId by MAX instead.
-    def nonEpoch(lines: Seq[String]): Seq[String] =
-      lines.filterNot(_.startsWith(EpochPrefix))
-    def epochMap(lines: Seq[String]): Map[String, Long] =
-      lines.filter(_.startsWith(EpochPrefix)).flatMap { l =>
-        l.split('\t') match {
-          case Array(_, qid, eid) => eid.toLongOption.map(qid -> _)
-          case _ => None
-        }
-      }.toMap
-    val baseMeta = nonEpoch(carriedMeta(dir, base)).toSet
-    val bMetaAll = carriedMeta(bd, bv).filterNot(isBranchBaseLine)
-    val bMeta = nonEpoch(bMetaAll)
-    val branchMetaChanged = bMeta.toSet != baseMeta
-    val baseRen = renameLines(dir, base).toSet
-    val bRen = renameLines(bd, bv)
-    val branchRenChanged = bRen.toSet != baseRen
+    // metadata compares EXCLUDE streaming epoch high-waters: an epoch
+    // landing on either side is a sink progress marker, not a metadata
+    // edit (counting it would spuriously block every merge into a
+    // streaming-fed table); epochs merge per-queryId by MAX instead.
+    def meta(s: Snapshot) = (s.policies.toSet, s.props.toSet, s.schema)
+    val bMeta = b.withoutProp(BranchBaseProp)
+    val branchMetaChanged = meta(bMeta) != meta(fork)
+    val branchRenChanged = b.renames.toSet != fork.renames.toSet
+    def sameMetaAsBranch(m: Snapshot): Boolean =
+      (!branchMetaChanged || meta(m) == meta(bMeta)) &&
+        (!branchRenChanged || m.renames.toSet == b.renames.toSet)
 
     try {
       branchAdded.map(nameOf).foreach(linkLocal)
       branchNewDvs.map(_.file).foreach(linkLocal)
-      var attempt = 0
-      var committed = -1
-      while (committed < 0) {
-        val head = currentVersion(dir)
+      val committed = commitLoop(dir, s"merge of branch '$name'") { m =>
         // main's delta since the fork, re-read under the CAS loop
-        val mainLines = listLines(dir, head)
-        val mainNames = mainLines.map(nameOf).toSet
-        val mainDvs = dvEntries(dir, head)
-        val mainDvEnc = mainDvs.map(encodeDv).toSet
-        val mainMetaAll = carriedMeta(dir, head)
-        val mainMeta = nonEpoch(mainMetaAll)
-        val mainRen = renameLines(dir, head)
+        val mainNames = m.names.toSet
         // IDEMPOTENT RE-RUN: after a crashed/failed retire the branch is
         // still listed but its whole delta already sits on main (our own
         // prior publish) — retire and return the head instead of refusing
@@ -1022,7 +1063,7 @@ object ManifestTable {
         val positiveSignal =
           (branchAdded.nonEmpty || branchNewDvs.nonEmpty) &&
           branchAdded.forall(l => mainNames.contains(nameOf(l))) &&
-          branchNewDvs.forall(e => mainDvEnc.contains(encodeDv(e)))
+          branchNewDvs.forall(m.dvs.contains)
         // metadata/rename-ONLY deltas have no removal ambiguity (nothing
         // to confuse with main's independent removals), and an identical
         // end state on main makes the retire harmless even if main set
@@ -1030,98 +1071,68 @@ object ManifestTable {
         val metaOnlyApplied =
           branchAdded.isEmpty && branchNewDvs.isEmpty &&
           branchRemoved.isEmpty &&
-          (branchMetaChanged || branchRenChanged) &&
-          (!branchMetaChanged || mainMeta.toSet == bMeta.toSet) &&
-          (!branchRenChanged || mainRen.toSet == bRen.toSet)
+          (branchMetaChanged || branchRenChanged) && sameMetaAsBranch(m)
         val alreadyApplied = metaOnlyApplied || (positiveSignal &&
           branchRemoved.forall(n => !mainNames.contains(n)) &&
-          (!branchMetaChanged || mainMeta.toSet == bMeta.toSet) &&
-          (!branchRenChanged || mainRen.toSet == bRen.toSet))
-        if (alreadyApplied) {
-          pub.published = true // any linked files belong to main already
-          committed = head
-        } else {
-        val mainNewDvs =
-          mainDvs.filterNot(e => baseDvEnc.contains(encodeDv(e)))
-        val mainTouched = (baseNames -- mainNames) ++
-          mainNewDvs.flatMap(_.targets).filter(baseNames.contains)
-        val conflicts = branchTouched intersect mainTouched
-        // ROW-LEVEL RECONCILIATION (round 17): a fork file BOTH sides
-        // touched is still mergeable when neither side removed or rewrote
-        // it (each side's touch is marker-only — concurrent MOR DML on
-        // overlapping files) and the two sides' new markers doom provably
-        // DISJOINT rows of the same immutable copy ([[dvRowsDisjointOn]]).
-        // Both markers then publish together: the read path already
-        // applies every marker of a file's group, and recorded doomed-live
-        // counts stay additive exactly because no row is doomed twice. A
-        // true row overlap — or anything unprovable (a marker read
-        // failure, mixed kinds) — keeps the refusal, never guesses.
-        val irreconcilable = conflicts.filterNot { f =>
-          bNames.contains(f) && mainNames.contains(f) &&
-            (try dvRowsDisjointOn(dir, f,
-                branchNewDvs.filter(_.targets.contains(f)),
-                mainNewDvs.filter(_.targets.contains(f)))
-             catch { case scala.util.control.NonFatal(_) => false })
-        }
-        if (irreconcilable.nonEmpty) {
-          unlink()
-          throw new IllegalStateException(
-            s"merge of branch '$name' refused: both sides touched " +
-              s"${irreconcilable.toSeq.sorted.mkString("[", ", ", "]")} " +
-              s"since fork v$base and the row edits cannot be proven " +
-              "disjoint — one side's rows would be silently discarded; " +
-              "re-cut the branch and replay")
-        }
-        val mainMetaChanged = mainMeta.toSet != baseMeta
-        if ((branchMetaChanged || branchRenChanged) &&
-            (mainMetaChanged || mainRen.toSet != baseRen)) {
-          unlink()
-          throw new IllegalStateException(
-            s"merge of branch '$name' refused: both sides changed table " +
-              s"metadata since fork v$base — re-cut the branch")
-        }
-        // sink high-waters merge by per-queryId MAX (monotone — a replayed
-        // epoch below either side's marker still no-ops after the merge)
-        val mergedEpochs = (epochMap(mainMetaAll).toSeq ++
-            epochMap(bMetaAll).toSeq)
-          .groupMapReduce(_._1)(_._2)(math.max)
-          .toSeq.sortBy(_._1).map { case (q, e) => s"$EpochPrefix$q\t$e" }
-        val mergedMeta =
-          (if (branchMetaChanged) bMeta else mainMeta) ++ mergedEpochs
-        val mergedRen = if (branchRenChanged) bRen else mainRen
-        val mergedLines = mainLines.filterNot(l =>
-          branchRemoved.contains(nameOf(l))) ++ branchAdded
-        val mergedNames = mergedLines.map(nameOf).toSet
-        // markers whose targets left the snapshot are moot — prune them
-        // (their doomed rows were materialized away by whichever side
-        // removed the target)
-        val mergedDvs = (mainDvs ++ branchNewDvs)
-          .map(e => e.copy(targets = e.targets.filter(mergedNames.contains),
-            counts = e.counts.filter { case (t, _) => mergedNames.contains(t) }))
-          .filter(_.targets.nonEmpty)
-        if (commitMutate(dir, mergedLines ++ mergedDvs.map(encodeDv) ++
-            mergedRen ++ mergedMeta, head)) {
-          committed = head + 1; pub.published = true
-        }
+          sameMetaAsBranch(m))
+        if (alreadyApplied) None // any linked files belong to main already
         else {
-          attempt += 1
-          if (attempt >= 10) {
-            unlink()
-            throw new IllegalStateException(
-              s"merge of branch '$name' on $dir lost the CAS 10 times — " +
-                "retry under less contention")
+          val mainNewDvs = m.dvs.filterNot(baseDvs.contains)
+          val mainTouched = (baseNames -- mainNames) ++
+            mainNewDvs.flatMap(_.targets).filter(baseNames.contains)
+          val conflicts = branchTouched intersect mainTouched
+          // ROW-LEVEL RECONCILIATION (round 17): a fork file BOTH sides
+          // touched is still mergeable when neither side removed or
+          // rewrote it (each side's touch is marker-only — concurrent MOR
+          // DML on overlapping files) and the two sides' new markers doom
+          // provably DISJOINT rows of the same immutable copy
+          // ([[dvRowsDisjointOn]]). Both markers then publish together:
+          // the read path already applies every marker of a file's group,
+          // and recorded doomed-live counts stay additive exactly because
+          // no row is doomed twice. A true row overlap — or anything
+          // unprovable (a marker read failure, mixed kinds) — keeps the
+          // refusal, never guesses.
+          val irreconcilable = conflicts.filterNot { f =>
+            bNames.contains(f) && mainNames.contains(f) &&
+              (try dvRowsDisjointOn(dir, f,
+                  branchNewDvs.filter(_.targets.contains(f)),
+                  mainNewDvs.filter(_.targets.contains(f)))
+               catch { case scala.util.control.NonFatal(_) => false })
           }
+          if (irreconcilable.nonEmpty)
+            throw new IllegalStateException(
+              s"merge of branch '$name' refused: both sides touched " +
+                s"${irreconcilable.toSeq.sorted.mkString("[", ", ", "]")} " +
+                s"since fork v$base and the row edits cannot be proven " +
+                "disjoint — one side's rows would be silently discarded; " +
+                "re-cut the branch and replay")
+          if ((branchMetaChanged || branchRenChanged) &&
+              (meta(m) != meta(fork) || m.renames.toSet != fork.renames.toSet))
+            throw new IllegalStateException(
+              s"merge of branch '$name' refused: both sides changed table " +
+                s"metadata since fork v$base — re-cut the branch")
+          // whichever side changed metadata wins; sink high-waters merge
+          // by per-queryId MAX (monotone — a replayed epoch below either
+          // side's marker still no-ops after the merge). Markers whose
+          // targets left the snapshot are moot and drop ([[withFiles]]).
+          val metaSide = if (branchMetaChanged) bMeta else m
+          val merged = m.copy(
+            dvs = m.dvs ++ branchNewDvs,
+            renames = if (branchRenChanged) b.renames else m.renames,
+            policies = metaSide.policies, props = metaSide.props,
+            schema = metaSide.schema,
+            epochs = (m.epochs ++ b.epochs).groupMapReduce(_._1)(_._2)(math.max)
+              .toSeq.sortBy(_._1))
+          Some(merged.withFiles(m.files.filterNot(l =>
+            branchRemoved.contains(nameOf(l))) ++ branchAdded) -> Kind.Mutate)
         }
-        } // end !alreadyApplied
       }
       // the retire step is best-effort: the publish is committed, a
       // leftover branch is benign and re-droppable
+      pub.published = true
       try dropBranch(dir, name) catch { case _: Exception => () }
       committed
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        unlink(); throw e
-    }
+    } catch { case e: Throwable => unlink(); throw e }
   }
 
   /** Abandon (or retire after publish) branch `name`: remove its
@@ -1175,11 +1186,12 @@ object ManifestTable {
       if (!Files.isDirectory(Paths.get(cloneDir))) Iterator.empty
       else (0 to currentVersion(cloneDir)).iterator
         .filter(v => Files.exists(manifestPath(cloneDir, v)))
-        .flatMap(v => listFiles(cloneDir, v) ++
+        .map(snapshot(cloneDir, _))
+        .flatMap(c => c.names ++
           // the clone's DV markers re-point into the source too: both the
           // doomed-key parquet AND its target files must survive a source
           // vacuum, or the clone's merge-on-read scan dangles
-          dvEntries(cloneDir, v).flatMap(e => e.file +: e.targets.toSeq))
+          c.dvs.flatMap(e => e.file +: e.targets.toSeq))
         .collect { case f if f.startsWith(dataPrefix) =>
           f.stripPrefix(dataPrefix) }
     }.toSet
@@ -1212,12 +1224,24 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed snapshot in $dir")
     val keepFrom = math.max(0, cur - keepVersions + 1)
+    dropUnretained(dir, (0 until keepFrom), (keepFrom to cur), force)
+  }
+
+  /** Delete manifests `dropped`, then every data file and segment no
+    * `retained` version (nor, unless `force`, a live clone) references.
+    * Returns (#manifests, #data files) removed. */
+  private def dropUnretained(dir: String, dropped: Seq[Int],
+      retained: Seq[Int], force: Boolean): (Int, Int) = {
     val cloneKeep = if (force) Set.empty[String] else cloneReferencedFiles(dir)
-    val keepFiles = (keepFrom to cur).flatMap(listFiles(dir, _)).toSet ++
-      (keepFrom to cur).flatMap(dvEntries(dir, _).map(_.file)).toSet ++ cloneKeep
-    val keepSegs = (keepFrom to cur).flatMap(listSegmentNames(dir, _)).toSet
-    val droppedManifests = (0 until keepFrom)
-      .count(v => Files.deleteIfExists(manifestPath(dir, v)))
+    val kept = retained.map(snapshot(dir, _))
+    val keepFiles = kept.flatMap(k => k.names ++ k.dvs.map(_.file)).toSet ++
+      cloneKeep
+    val keepSegs = kept.flatMap(_.files match {
+      case sf: SegmentFiles => sf.summaryLines.map(nameOf)
+      case _ => Nil
+    }).toSet
+    val droppedManifests =
+      dropped.count(v => Files.deleteIfExists(manifestPath(dir, v)))
     val dataDir = Paths.get(dir, "data")
     val droppedFiles =
       if (!Files.isDirectory(dataDir)) 0
@@ -1248,33 +1272,16 @@ object ManifestTable {
     val cur = currentVersion(dir)
     require(cur >= 0, s"no committed snapshot in $dir")
     require(keepLast >= 1, "expireSnapshots must keep at least the head")
-    val tagged: Set[Int] = tableProperties(dir, cur).collect {
+    val tagged: Set[Int] = snapshot(dir, cur).props.collect {
       case (k, value) if k.startsWith("graft.tag.") &&
           value.nonEmpty && value.forall(_.isDigit) => value.toInt
     }.toSet
     val present = (0 to cur).filter(v => Files.exists(manifestPath(dir, v)))
     val (dropped, retained) = present.partition { v =>
       v <= cur - keepLast && !tagged(v) &&
-        commitInstantMillis(dir, v).exists(_ < olderThanMillis)
+        snapshot(dir, v).ts.exists(_ < olderThanMillis)
     }
-    val cloneKeep = if (force) Set.empty[String] else cloneReferencedFiles(dir)
-    val keepFiles = retained.flatMap(listFiles(dir, _)).toSet ++
-      retained.flatMap(dvEntries(dir, _).map(_.file)).toSet ++ cloneKeep
-    val keepSegs = retained.flatMap(listSegmentNames(dir, _)).toSet
-    val droppedManifests =
-      dropped.count(v => Files.deleteIfExists(manifestPath(dir, v)))
-    val dataDir = Paths.get(dir, "data")
-    val droppedFiles =
-      if (!Files.isDirectory(dataDir)) 0
-      else listDir(dataDir)
-        .filter(p => !keepFiles.contains(p.getFileName.toString))
-        .count(Files.deleteIfExists(_))
-    val metaDir = Paths.get(dir, "meta")
-    if (Files.isDirectory(metaDir))
-      listDir(metaDir)
-        .filter(p => !keepSegs.contains(p.getFileName.toString))
-        .foreach(Files.deleteIfExists(_))
-    (droppedManifests, droppedFiles.toInt)
+    dropUnretained(dir, dropped, retained, force)
   }
 
   /** Incremental change read (CDC-style consumption): the rows ADDED between
@@ -1297,15 +1304,16 @@ object ManifestTable {
     * commit files, exactly once, with no re-bootstrap. */
   def changedFileNames(dir: String, fromV: Int, toV: Int): Seq[String] = {
     require(fromV <= toV, s"changedFileNames: fromV $fromV > toV $toV")
-    val versions = math.max(fromV, -1) + 1 to toV
-    versions.find(isMutate(dir, _)).foreach { v =>
+    val snaps = (math.max(fromV, -1) + 1 to toV).map(snapshot(dir, _))
+    snaps.find(_.kind == Kind.Mutate).foreach { s =>
       throw new IllegalStateException(
-        s"change range ($fromV, $toV] crosses row-level mutation commit v$v; " +
+        s"change range ($fromV, $toV] crosses row-level mutation commit v${s.version}; " +
           "an append-only change feed cannot express it — re-bootstrap the consumer")
     }
-    versions.filterNot(isRewrite(dir, _)).flatMap { v =>
-      val before = if (v == 0) Set.empty[String] else listFiles(dir, v - 1).toSet
-      listFiles(dir, v).filterNot(before)
+    snaps.filterNot(_.kind == Kind.Rewrite).flatMap { s =>
+      val before = if (s.version == 0) Set.empty[String]
+        else listFiles(dir, s.version - 1).toSet
+      s.names.filterNot(before)
     }
   }
 
@@ -1330,20 +1338,14 @@ object ManifestTable {
     * and at 100 TB an uncompacted table of per-batch files makes every scan
     * pay thousands of file opens for row groups that should be contiguous.
     * Returns the new committed version. */
-  def compact(s: SparkSession, dir: String, numFiles: Int = 1,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to compact in $dir")
-      val staged = stage(s, dir, readVersion(s, dir, v).repartition(numFiles))
-      // DV/rename markers materialize into the rewrite; POLICIES do not —
-      // they govern reads forever and must survive compaction
-      if (commitRewrite(dir, staged ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+  def compact(s: SparkSession, dir: String, numFiles: Int = 1): Int =
+    commitLoop(dir, "compact") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to compact in $dir")
+      val staged = stage(s, dir,
+        readVersion(s, dir, cur.version).repartition(numFiles))
+      // DV/rename markers materialize into the rewrite
+      Some(cur.copy(files = staged, dvs = Nil, renames = Nil) -> Kind.Rewrite)
     }
-    throw new IllegalStateException(s"compact lost $maxRetries commit races in $dir")
-  }
 
   // ---------------------------------------------------------------------
   // File-level min/max statistics + data skipping (the Delta/Iceberg scan
@@ -1365,9 +1367,6 @@ object ManifestTable {
 
   /** Encode recorded ranges as the manifest-line stats suffix (the
     * writer-side counterpart of [[parseEntry]]). */
-  def encodeStatsPublic(stats: Map[String, ColRange]): String =
-    encodeStats(stats)
-
   private def encodeStats(stats: Map[String, ColRange]): String =
     stats.toSeq.sortBy(_._1).map { case (c, r) =>
       s"$c=${r.tag}:${r.min}:${r.max}"
@@ -1434,26 +1433,17 @@ object ManifestTable {
       nulls, sums)
   }
 
-  /** Parse one manifest line → (file name, recorded column ranges). */
-  def parseLine(line: String): (String, Map[String, ColRange]) = {
-    val e = parseEntry(line)
-    (e.name, e.ranges)
-  }
-
   private[sources] def hexEncode(b: Array[Byte]): String =
     b.map(x => f"${x & 0xff}%02x").mkString
 
   private def hexDecode(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
-  /** Footer-harvested min/max for `cols` of one staged parquet file, or an
-    * empty map per column whose chunk statistics are absent (that column is
-    * then unprunable for this file — the safe degradation). Runs on the
+  /** Footer-harvested min/max for `cols` of one staged file's row groups,
+    * omitting each column whose chunk statistics are absent (that column
+    * is then unprunable for this file — the safe degradation). Runs on the
     * committing writer, O(footer) per NEW file only — the same moment Delta
     * writes stats into its log. */
-  def footerStats(file: Path, cols: Seq[String]): Map[String, ColRange] =
-    withFooterBlocks(file)(statsFromBlocks(_, cols))
-
   private def statsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, ColRange] = {
@@ -1548,12 +1538,9 @@ object ManifestTable {
     else bumpBytes(b.take(StrStatMaxBytes))
 
   /** Footer-harvested truncated UTF-8 min/max for STRING columns of one
-    * staged parquet file (columns whose statistics are absent, non-string,
-    * or unbumpable are simply missing — unprunable, the safe default). */
-  def footerStatsStr(file: Path,
-      cols: Seq[String]): Map[String, (Array[Byte], Array[Byte])] =
-    withFooterBlocks(file)(strStatsFromBlocks(_, cols))
-
+    * staged file's row groups (columns whose statistics are absent,
+    * non-string, or unbumpable are simply missing — unprunable, the safe
+    * default). */
   private def strStatsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, (Array[Byte], Array[Byte])] = {
@@ -1590,21 +1577,6 @@ object ManifestTable {
     * statistics are computed in, and the order every prune compares in. */
   private[sources] val byteOrdering: Ordering[Array[Byte]] =
     (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b)
-
-  /** [[pruneFiles]]' STRING leg — metadata-only pruning for an equality
-    * predicate on a string column: (files that may hold `value`, total). */
-  def pruneFilesStr(dir: String, v: Int, col: String,
-      value: String): (Seq[String], Int) = {
-    val x = value.getBytes("UTF-8")
-    val entries = listLines(dir, v).map(parseEntry)
-    val kept = entries.collect {
-      case e if e.strRanges.get(col).forall { case (lo, hi) =>
-        java.util.Arrays.compareUnsigned(lo, x) <= 0 &&
-          java.util.Arrays.compareUnsigned(x, hi) <= 0
-      } => e.name
-    }
-    (kept, entries.size)
-  }
 
   /** Open `file`'s parquet footer ONCE and hand its row-group metadata to
     * `f` — the shared footer read every harvest leg below goes through.
@@ -1645,10 +1617,7 @@ object ManifestTable {
     // from (an API table's first-ever append); a catalog table's
     // `INSERT … WHERE false` publishes nothing at all.
     val live = staged.filter(_._3._1 > 0)
-    val declared = {
-      val v = currentVersion(dir)
-      v >= 0 && declaredSchema(dir, v).isDefined
-    }
+    val declared = head(dir).schema.isDefined
     val kept =
       if (live.nonEmpty) live
       else if (declared) Seq.empty
@@ -1683,9 +1652,6 @@ object ManifestTable {
     * any row group does not record it — the safe degradation (COUNT(col)
     * stays scan-served, the CBO null estimate stays absent). With them,
     * `SELECT count(col)` is exact from metadata: rows − nulls. */
-  def footerNulls(file: Path, cols: Seq[String]): Map[String, Long] =
-    withFooterBlocks(file)(nullsFromBlocks(_, cols))
-
   private def nullsFromBlocks(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): Map[String, Long] =
@@ -1748,11 +1714,11 @@ object ManifestTable {
     * max(k)` a warehouse answers in milliseconds from its catalog while a
     * naive engine launches a full scan. */
   def metadataAgg(dir: String, col: String): (Long, BigDecimal, BigDecimal) = {
-    val v = currentVersion(dir)
-    require(v >= 0, s"no committed snapshot in $dir")
-    require(dvLines(dir, v).isEmpty,
+    val snap = head(dir)
+    require(snap.version >= 0, s"no committed snapshot in $dir")
+    require(snap.dvs.isEmpty,
       "metadata aggregate is unknowable under deletion vectors — compact first")
-    val es = listLines(dir, v).map(parseEntry)
+    val es = snap.entries
     require(es.nonEmpty && es.forall(e => e.rows.isDefined && e.ranges.contains(col)),
       s"metadata aggregate needs a row count and a '$col' range on every file")
     (es.flatMap(_.rows).sum,
@@ -1859,31 +1825,8 @@ object ManifestTable {
     * data I/O: exactly the per-file `null_count`/`ndv` stats Iceberg
     * carries in its manifests for cost-based planning. */
   def stageWithNdv(s: SparkSession, dir: String, df: DataFrame,
-      statsCols: Seq[String], ndvCols: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col => c, input_file_name,
-      substring_index, hll_sketch_agg}
-    val lines = stageWithStats(s, dir, df, statsCols)
-    if (ndvCols.isEmpty) return lines
-    val aggs = ndvCols.map(nc => hll_sketch_agg(c(nc)).as(s"sk_$nc"))
-    val sketches = s.read.parquet(lines.map(l =>
-        dataPath(dir, l.split('\t').head)): _*)
-      .groupBy(substring_index(input_file_name(), "/", -1).as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per staged FILE — bounded by construction
-      .map(r => r.getString(0) ->
-        ndvCols.map(nc => nc -> r.getAs[Array[Byte]](s"sk_$nc")).toMap)
-      .toMap
-    lines.map { line =>
-      val name = line.split('\t').head
-      sketches.get(name) match {
-        case Some(m) =>
-          val enc = m.toSeq.sortBy(_._1)
-            .map { case (nc, b) => s"$nc=H:${hexEncode(b)}" }.mkString(";")
-          s"$line\t$enc"
-        case None => line
-      }
-    }
-  }
+      statsCols: Seq[String], ndvCols: Seq[String]): Seq[String] =
+    stageWithIndexes(s, dir, df, statsCols, bloomCols = Nil, ndvCols = ndvCols)
 
   /** Distinct-count estimate for `col` over the files a `[lo, hi]` range
     * prune admits, by unioning their stored HLL register blobs — metadata
@@ -1897,9 +1840,9 @@ object ManifestTable {
   def estimateNdv(dir: String, col: String, lo: BigDecimal, hi: BigDecimal,
       numStdDev: Int = 2): (Double, Double) = {
     import org.apache.datasketches.hll.{HllSketch, Union}
-    val v = currentVersion(dir)
-    require(v >= 0, s"no committed snapshot in $dir")
-    val admitted = listLines(dir, v).map(parseEntry)
+    val snap = head(dir)
+    require(snap.version >= 0, s"no committed snapshot in $dir")
+    val admitted = snap.entries
       .filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
     require(admitted.nonEmpty && admitted.forall(_.hlls.contains(col)),
       s"estimateNdv needs an HLL sketch for '$col' on every admitted file")
@@ -1964,10 +1907,8 @@ object ManifestTable {
       col == DvKeyCache.PosCol || targets.forall(counts.contains)
   }
 
-  private val DvPrefix = "#dv\t"
-
-  private[sources] def encodeDv(e: DvEntry): String = {
-    val base = s"#dv\t${e.file}\t${e.col}\t${e.targets.toSeq.sorted.mkString(",")}"
+  private def encodeDv(e: DvEntry): String = {
+    val base = s"$DvPrefix${e.file}\t${e.col}\t${e.targets.toSeq.sorted.mkString(",")}"
     // the counts leg only encodes when it prices every target — a
     // partial map is as useless as none, so never persist one
     if (e.col != DvKeyCache.PosCol && e.counts.nonEmpty &&
@@ -1977,16 +1918,7 @@ object ManifestTable {
     else base
   }
 
-  /** Raw `#dv` marker lines of version `v` (carried verbatim by successor
-    * commits that keep the same data files). */
-  def dvLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(DvPrefix)).toSeq
-  }
-
-  def dvEntries(dir: String, v: Int): Seq[DvEntry] =
-    dvLines(dir, v).map(parseDvLine)
+  def dvEntries(dir: String, v: Int): Seq[DvEntry] = snapshot(dir, v).dvs
 
   /** Exact per-target doomed-live counts across EVERY marker of a
     * snapshot — positional bitmaps (exact by construction) plus keyed
@@ -2014,50 +1946,29 @@ object ManifestTable {
       .map(t => t -> (pos.getOrElse(t, 0L) + k.getOrElse(t, 0L))).toMap
   }
 
-  /** DV lines carried forward by a commit that keeps only `surviving` data
-    * files: targets intersect with the survivors; a DV left targeting
-    * nothing is dropped (its doomed rows were materialized away). */
-  private[sources] def carriedDvLines(dir: String, v: Int,
-      surviving: Set[String]): Seq[String] =
-    dvEntries(dir, v)
-      .map { e =>
-        val t = e.targets.intersect(surviving)
-        e.copy(targets = t, counts = e.counts.filter(kv => t(kv._1)))
-      }
-      .filter(_.targets.nonEmpty)
-      .map(encodeDv)
-
-  /** Read data files `names` of version `v` with every applicable deletion
+  /** Read data files `names` of snapshot `snap` with every applicable deletion
     * vector applied. Files are grouped by the exact DV set targeting them;
     * untargeted files scan clean, targeted groups anti-join against the
     * (broadcast, O(deleted keys)) DV key sets. Rename markers compose
     * (round 14): each group reconciles into the evolved view FIRST, then
     * anti-joins on the key column's evolved name — key values are
     * rename-invariant, so dooming on the evolved view is exact. */
-  def readWithDvs(s: SparkSession, dir: String, v: Int,
+  def readWithDvs(s: SparkSession, dir: String, snap: Snapshot,
       names: Seq[String]): DataFrame =
-    applyDvs(s, dir, names, dvEntries(dir, v), renames(dir, v))
+    applyDvs(s, dir, names, snap.dvs, snap.renames)
 
-  /** Read data files `names` of version `v` with the snapshot's row- and
+  /** Read data files `names` of snapshot `snap` with its row- and
     * name-generation state applied: rename markers reconcile old-name
     * columns into the evolved view, deletion vectors drop doomed rows —
     * composing freely since round 14. The engine-side read for partial
     * rewrites (filtered overwrite survivors). */
-  def readFilesReconciled(s: SparkSession, dir: String, v: Int,
-      names: Seq[String]): DataFrame = {
-    val rns = renames(dir, v)
-    if (dvLines(dir, v).nonEmpty) readWithDvs(s, dir, v, names)
-    else if (rns.nonEmpty)
+  def readFilesReconciled(s: SparkSession, dir: String, snap: Snapshot,
+      names: Seq[String]): DataFrame =
+    if (snap.dvs.nonEmpty) readWithDvs(s, dir, snap, names)
+    else if (snap.renames.nonEmpty)
       applyRenames(s.read.option("mergeSchema", "true")
-        .parquet(names.map(dataPath(dir, _)): _*), rns)
+        .parquet(names.map(dataPath(dir, _)): _*), snap.renames)
     else s.read.parquet(names.map(dataPath(dir, _)): _*)
-  }
-
-  /** Each column's FINAL name under version `v`'s rename chain (identity
-    * when unrenamed) — what a rewrite that modernizes old-generation
-    * rows should harvest stats under. */
-  def finalNames(dir: String, v: Int): Map[String, String] =
-    collapseRenames(renames(dir, v))
 
   /** Collapse a rename chain into from → final-name (every historical
     * name of a column maps to its evolved name). One definition, shared
@@ -2145,27 +2056,6 @@ object ManifestTable {
       else Map.empty)
   }
 
-  /** MERGE-ON-READ DELETE (`DELETE WHERE col IN keys`): stats pick the
-    * files that can hold the keys (same range+bloom prune as the
-    * copy-on-write [[deleteKeys]]); one tiny key parquet stages; a `#dv`
-    * marker targeting exactly those files publishes under the ordinary
-    * CAS as a `#mutate` commit. No data file is rewritten — time travel,
-    * snapshot isolation, and vacuum semantics are unchanged, and
-    * [[compact]] later materializes the delete physically. Returns the new
-    * version (current if no file can hold any key). */
-  /** The names a logical column has carried across version `v`'s rename
-    * chain, evolved name first: stats of pre-rename files live under the
-    * OLD names, so alias-aware pruning looks the column up under every
-    * generation's name (each file records at most one of them). `col`
-    * may be given under any generation; it normalizes to the evolved
-    * name first. */
-  private[sources] def aliasFamily(dir: String, v: Int,
-      col: String): Seq[String] = {
-    val fin = finalNames(dir, v)
-    val evolved = fin.getOrElse(col, col)
-    evolved +: fin.collect { case (from, to) if to == evolved => from }.toSeq
-  }
-
   /** Per-target DOOMED-LIVE counts for a NEW keyed marker: of `names`'
     * rows still live under version `v`'s existing markers and renames,
     * how many key cells land in `keyDf` (one column under the EVOLVED
@@ -2176,13 +2066,12 @@ object ManifestTable {
     * markers: a later delete never re-counts a row an earlier marker
     * already doomed. O(candidate files) driver rows come back — the
     * same bounded shape as the per-staged-file stats rows. */
-  private def doomedLiveCounts(s: SparkSession, dir: String, v: Int,
+  private def doomedLiveCounts(s: SparkSession, dir: String, snap: Snapshot,
       names: Seq[String], col: String,
       keyDf: DataFrame): Map[String, Long] = {
     val tag = "__graft_src_file"
     val byBase = names.map(n => DvKeyCache.baseName(n) -> n).toMap
-    applyDvs(s, dir, names, dvEntries(dir, v), renames(dir, v),
-        tagCol = Some(tag))
+    applyDvs(s, dir, names, snap.dvs, snap.renames, tagCol = Some(tag))
       .select(col, tag)
       .join(broadcast(keyDf), Seq(col))
       .groupBy(tag).count()
@@ -2190,50 +2079,19 @@ object ManifestTable {
       .map(r => byBase(r.getString(0)) -> r.getLong(1)).toMap
   }
 
+  /** MERGE-ON-READ DELETE (`DELETE WHERE col IN keys`): stats pick the
+    * files that can hold the keys (same range+bloom prune as the
+    * copy-on-write [[deleteKeys]]); one tiny key parquet stages; a `#dv`
+    * marker targeting exactly those files publishes under the ordinary
+    * CAS as a `#mutate` commit. No data file is rewritten — time travel,
+    * snapshot isolation, and vacuum semantics are unchanged, and
+    * [[compact]] later materializes the delete physically. Returns the new
+    * version (current if no file can hold any key). */
   def deleteKeysMOR(s: SparkSession, dir: String, col: String,
-      keys: Seq[Long], maxRetries: Int = 10): Int = {
+      keys: Seq[Long]): Int = {
     import s.implicits._
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      // rename markers compose (round 14): pre-rename files record their
-      // stats under OLD names, so pruning consults the whole alias
-      // family; the key parquet stages under the EVOLVED name, which is
-      // what the marker records and readers resolve per file generation
-      val family = aliasFamily(dir, v, col)
-      val evolved = family.head
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        family.flatMap(e.ranges.get).headOption.forall(r =>
-          keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
-        family.flatMap(e.blooms.get).headOption.forall(bf =>
-          keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      // the staged key write and the doomed-live counting pass are
-      // independent actions — overlap them (guide §2.6)
-      val dvFileF = {
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        scala.concurrent.Future(
-          stage(s, dir, keys.toDF(evolved).coalesce(1)))
-      }
-      // price the marker: exact doomed-live hits per candidate file, so
-      // the metadata COUNT/history/LIMIT tiers stay armed (round 15)
-      val hits = doomedLiveCounts(s, dir, v, affected.map(_.name),
-        evolved, keys.distinct.toDF(evolved))
-      val dvFile = scala.concurrent.Await.result(dvFileF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dvFile.size == 1)
-      val dv = encodeDv(DvEntry(dvFile.head, evolved,
-        affected.map(_.name).toSet,
-        affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ carriedMeta(dir, v) :+ dv
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; the staged DV stays a harmless orphan
-    }
-    throw new IllegalStateException(s"MOR delete lost $maxRetries races in $dir")
+    morDelete(s, dir, col, keys.distinct.toDF(_))(
+      (family, e) => mayHoldKeys(e, family, keys))
   }
 
   /** [[deleteKeysMOR]] for a STRING key column — the GDPR delete
@@ -2244,46 +2102,53 @@ object ManifestTable {
     * parquet, and readers binary-search sorted raw byte arrays exactly
     * like integral keys. Stats-less files are conservatively targeted. */
   def deleteStrKeysMOR(s: SparkSession, dir: String, col: String,
-      keys: Seq[String], maxRetries: Int = 10): Int = {
+      keys: Seq[String]): Int = {
     import s.implicits._
     val keyBytes = keys.map(_.getBytes("UTF-8"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      val family = aliasFamily(dir, v, col)
-      val evolved = family.head
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        family.flatMap(e.strRanges.get).headOption.forall { case (lo, hi) =>
-          keyBytes.exists(x =>
-            java.util.Arrays.compareUnsigned(lo, x) <= 0 &&
-              java.util.Arrays.compareUnsigned(x, hi) <= 0)
-        }
+    morDelete(s, dir, col, keys.distinct.toDF(_)) { (family, e) =>
+      family.flatMap(e.strRanges.get).headOption.forall { case (lo, hi) =>
+        keyBytes.exists(x =>
+          java.util.Arrays.compareUnsigned(lo, x) <= 0 &&
+            java.util.Arrays.compareUnsigned(x, hi) <= 0)
       }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      // overlap the independent staged-key write with the counting pass
-      // (guide §2.6), exactly like deleteKeysMOR
-      val dvFileF = {
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        scala.concurrent.Future(
-          stage(s, dir, keys.toDF(evolved).coalesce(1)))
-      }
-      val hits = doomedLiveCounts(s, dir, v, affected.map(_.name),
-        evolved, keys.distinct.toDF(evolved))
-      val dvFile = scala.concurrent.Await.result(dvFileF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dvFile.size == 1)
-      val dv = encodeDv(DvEntry(dvFile.head, evolved,
-        affected.map(_.name).toSet,
-        affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ carriedMeta(dir, v) :+ dv
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; the staged DV stays a harmless orphan
     }
-    throw new IllegalStateException(s"MOR delete lost $maxRetries races in $dir")
   }
+
+  /** The MOR delete both key kinds share: `affects(aliasFamily, entry)`
+    * picks the candidate files and `keyDf(name)` is the distinct doomed
+    * keys under column `name`. Rename markers compose (round 14):
+    * pre-rename files record their stats under OLD names, so pruning
+    * consults the whole alias family, and the key parquet stages under
+    * the EVOLVED name, which is what the marker records and readers
+    * resolve per file generation. */
+  private def morDelete(s: SparkSession, dir: String, col: String,
+      keyDf: String => DataFrame)(
+      affects: (Seq[String], FileEntry) => Boolean): Int =
+    commitLoop(dir, "MOR delete") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to delete from in $dir")
+      val family = cur.aliasFamily(col)
+      val evolved = family.head
+      val affected = cur.entries.filter(affects(family, _))
+      if (affected.isEmpty) None // nothing can hold the keys: no-op
+      else {
+        // the staged key write and the doomed-live counting pass are
+        // independent actions — overlap them (guide §2.6)
+        val dvFileF = {
+          implicit val ec: scala.concurrent.ExecutionContext = overlapEc
+          scala.concurrent.Future(stage(s, dir, keyDf(evolved).coalesce(1)))
+        }
+        // price the marker: exact doomed-live hits per candidate file, so
+        // the metadata COUNT/history/LIMIT tiers stay armed (round 15)
+        val hits = doomedLiveCounts(s, dir, cur, affected.map(_.name),
+          evolved, keyDf(evolved))
+        val dvFile = scala.concurrent.Await.result(dvFileF,
+          scala.concurrent.duration.Duration.Inf)
+        require(dvFile.size == 1)
+        val dv = DvEntry(dvFile.head, evolved, affected.map(_.name).toSet,
+          affected.map(e => e.name -> hits.getOrElse(e.name, 0L)).toMap)
+        Some(cur.copy(dvs = cur.dvs :+ dv) -> Kind.Mutate)
+      }
+    }
 
   /** RETRO-PRICE uncounted keyed markers (round 15): tables whose `#dv`
     * markers predate delete-time count recording decline the metadata
@@ -2299,57 +2164,50 @@ object ManifestTable {
     * leave the tiers declined anyway) or the arithmetic goes negative
     * (a damaged marker — refuse, never guess). Returns the new version
     * (current when every marker is already counted). */
-  def priceDvs(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to price in $dir")
-      val dvs = dvEntries(dir, v)
+  def priceDvs(s: SparkSession, dir: String): Int =
+    commitLoop(dir, "price_dvs") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to price in $dir")
+      val dvs = cur.dvs
       val uncounted = dvs.filterNot(_.fullyCounted)
-      if (uncounted.isEmpty) return v // nothing to price: no-op
-      val entries = listLines(dir, v).map(parseEntry)
-      val listed = entries.iterator.map(_.name).toSet
-      val rowsOf = entries.flatMap(e => e.rows.map(e.name -> _)).toMap
-      val targets = uncounted.flatMap(_.targets).distinct.filter(listed)
-      targets.foreach(t => require(rowsOf.contains(t),
-        s"price_dvs: $t lacks a recorded row count — cannot price"))
-      // one tagged pass, ALL markers applied → current live per target
-      // (every still-listed target gone stale from the manifest would
-      // leave nothing to measure — all markers then price to zeros)
-      val tag = "__graft_src_file"
-      val byBase = targets.map(t => DvKeyCache.baseName(t) -> t).toMap
-      val live =
-        if (targets.isEmpty) Map.empty[String, Long]
-        else applyDvs(s, dir, targets, dvs, renames(dir, v),
-            tagCol = Some(tag))
-          .groupBy(col(tag)).count().collect()
-          .map(r => byBase(r.getString(0)) -> r.getLong(1)).toMap
-      val counted = doomedCountsOfCounted(dir, dvs)
-      val remainder = targets.map { t =>
-        val r = rowsOf(t) - live.getOrElse(t, 0L) - counted.getOrElse(t, 0L)
-        require(r >= 0, s"price_dvs: negative doom remainder for $t " +
-          s"(rows=${rowsOf(t)} live=${live.getOrElse(t, 0L)} " +
-          s"counted=${counted.getOrElse(t, 0L)}) — damaged marker state")
-        t -> r
-      }.toMap
-      // firstFor only holds LISTED targets, so stale targets fall
-      // through to the zero branch below with no extra existence check
-      val firstFor = targets.map(t =>
-        t -> uncounted.find(_.targets(t)).get).toMap
-      val newDvLines = dvs.map { m =>
-        if (m.fullyCounted) encodeDv(m)
-        else encodeDv(m.copy(counts = m.targets.map(t =>
-          t -> (if (firstFor.get(t) contains m) remainder(t)
-                else 0L)).toMap))
+      if (uncounted.isEmpty) None // nothing to price: no-op
+      else {
+        val entries = cur.entries
+        val listed = entries.iterator.map(_.name).toSet
+        val rowsOf = entries.flatMap(e => e.rows.map(e.name -> _)).toMap
+        val targets = uncounted.flatMap(_.targets).distinct.filter(listed)
+        targets.foreach(t => require(rowsOf.contains(t),
+          s"price_dvs: $t lacks a recorded row count — cannot price"))
+        // one tagged pass, ALL markers applied → current live per target
+        // (every still-listed target gone stale from the manifest would
+        // leave nothing to measure — all markers then price to zeros)
+        val tag = "__graft_src_file"
+        val byBase = targets.map(t => DvKeyCache.baseName(t) -> t).toMap
+        val live =
+          if (targets.isEmpty) Map.empty[String, Long]
+          else applyDvs(s, dir, targets, dvs, cur.renames,
+              tagCol = Some(tag))
+            .groupBy(col(tag)).count().collect()
+            .map(r => byBase(r.getString(0)) -> r.getLong(1)).toMap
+        val counted = doomedCountsOfCounted(dir, dvs)
+        val remainder = targets.map { t =>
+          val r = rowsOf(t) - live.getOrElse(t, 0L) - counted.getOrElse(t, 0L)
+          require(r >= 0, s"price_dvs: negative doom remainder for $t " +
+            s"(rows=${rowsOf(t)} live=${live.getOrElse(t, 0L)} " +
+            s"counted=${counted.getOrElse(t, 0L)}) — damaged marker state")
+          t -> r
+        }.toMap
+        // firstFor only holds LISTED targets, so stale targets fall
+        // through to the zero branch below with no extra existence check
+        val firstFor = targets.map(t =>
+          t -> uncounted.find(_.targets(t)).get).toMap
+        val priced = dvs.map { m =>
+          if (m.fullyCounted) m
+          else m.copy(counts = m.targets.map(t =>
+            t -> (if (firstFor.get(t) contains m) remainder(t) else 0L)).toMap)
+        }
+        Some(cur.copy(dvs = priced) -> Kind.Rewrite)
       }
-      val body = listLines(dir, v) ++ newDvLines ++ renameLines(dir, v) ++
-        carriedMeta(dir, v)
-      if (commitRewrite(dir, body, v)) return v + 1
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"price_dvs lost $maxRetries commit races in $dir")
-  }
 
   /** DV MAINTENANCE — consolidate accumulated `#dv` markers without
     * touching any data file: afterwards every target file is referenced
@@ -2368,12 +2226,10 @@ object ManifestTable {
     * so incremental consumers skip it, exactly like compaction. Cost ∝
     * deleted keys, never table size. Returns the new version (the
     * current one when no file is multi-targeted). */
-  def consolidateDvs(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to consolidate in $dir")
-      val dvs = dvEntries(dir, v)
+  def consolidateDvs(s: SparkSession, dir: String): Int =
+    commitLoop(dir, "consolidateDvs") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to consolidate in $dir")
+      val dvs = cur.dvs
       val groups: Seq[(String, Seq[String], Seq[String])] =
         dvs.flatMap(m => m.targets.toSeq.map(t => (m.col, t, m.file)))
           .groupBy { case (c, t, _) => (c, t) }
@@ -2382,86 +2238,82 @@ object ManifestTable {
           .groupBy { case (c, _, fs) => (c, fs) }
           .map { case ((c, fs), ts) => (c, fs, ts.map(_._2).sorted) }
           .toSeq
-      if (groups.forall(_._2.size <= 1)) return v
-      // recorded doomed-live counts survive consolidation: each
-      // (marker, target) lands in exactly one group, so restricting a
-      // carried marker's counts to its group targets — and SUMMING
-      // across a merged group's markers — keeps the per-target totals
-      // exact; a group with any uncounted marker merges uncounted
-      def countsFor(c: String, keyFiles: Seq[String],
-          targets: Seq[String]): Map[String, Long] = {
-        val ms = dvs.filter(m => m.col == c && keyFiles.contains(m.file))
-        if (ms.exists(m => !m.targets.forall(m.counts.contains)))
-          Map.empty
-        else targets.map(t => t ->
-          ms.filter(_.targets(t)).map(_.counts.getOrElse(t, 0L)).sum).toMap
-      }
-      val newLines = groups.sortBy(g => (g._1, g._2.mkString(",")))
-          .flatMap { case (c, keyFiles, targets) =>
-        if (keyFiles.size == 1) // already minimal for these targets: the
-          // original key file carries, restricted to exactly this group
-          Seq(encodeDv(DvEntry(keyFiles.head, c, targets.toSet,
-            countsFor(c, keyFiles, targets))))
-        else if (c == "_pos") {
-          // positional markers OR their roaring bitmaps per target ON
-          // THE DRIVER — each positions file is compressed and bounded
-          // by graft.dv.maxBytes, so the merge is metadata-scale work
-          // (no Spark job); targets restrict naturally because lookups
-          // key by the target's basename
-          val merged = targets.map { t =>
-            val rb = new org.roaringbitmap.RoaringBitmap()
-            keyFiles.foreach(f =>
-              rb.or(DvKeyCache.doomedPositions(dataPath(dir, f), t)))
-            rb.runOptimize()
-            DvKeyCache.baseName(t) -> rb
-          }.filter(!_._2.isEmpty)
-          // a merged positions file past the per-file byte budget would
-          // make every subsequent scan REFUSE (the loader's loud
-          // maxBytes bound counts the WHOLE file) — decline merging
-          // this group and keep its original markers: reads stay
-          // exactly as fast as before, and the consolidation of other
-          // groups still lands
-          if (merged.map(_._2.serializedSizeInBytes().toLong).sum >
-              DvKeyCache.maxDvBytes)
-            keyFiles.map(f => encodeDv(DvEntry(f, c, targets.toSet)))
-          else {
-            val staged = GraftDeltaWriter.writePositionsFile(
-              dir, merged.iterator, "merged")
-            Seq(encodeDv(DvEntry(staged, c, targets.toSet)))
-          }
-        } else {
-          import org.apache.spark.sql.functions.{col => fcol}
-          // keyed markers union their single key column
-          val union = s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
-            .select(fcol(c))
-            .distinct().coalesce(1)
-            .persist() // counted once for the budget, staged once — not
-          try {        // two full read+distinct passes
-            // a merged key file past the reader's per-file budget would
-            // make every subsequent scan of the targeted files REFUSE
-            // (DvKeyCache.doomed's loud maxKeys bound) — decline merging
-            // this group and keep its original markers, same contract
-            // as the positional byte-budget decline
-            if (union.count() > DvKeyCache.maxKeys)
-              keyFiles.map(f => encodeDv(DvEntry(f, c, targets.toSet,
-                countsFor(c, Seq(f), targets))))
-            else {
-              val staged = stage(s, dir, union)
-              require(staged.size == 1)
-              Seq(encodeDv(DvEntry(staged.head, c, targets.toSet,
-                countsFor(c, keyFiles, targets))))
-            }
-          } finally union.unpersist(false)
+      if (groups.forall(_._2.size <= 1)) None
+      else {
+        // recorded doomed-live counts survive consolidation: each
+        // (marker, target) lands in exactly one group, so restricting a
+        // carried marker's counts to its group targets — and SUMMING
+        // across a merged group's markers — keeps the per-target totals
+        // exact; a group with any uncounted marker merges uncounted
+        def countsFor(c: String, keyFiles: Seq[String],
+            targets: Seq[String]): Map[String, Long] = {
+          val ms = dvs.filter(m => m.col == c && keyFiles.contains(m.file))
+          if (ms.exists(m => !m.targets.forall(m.counts.contains)))
+            Map.empty
+          else targets.map(t => t ->
+            ms.filter(_.targets(t)).map(_.counts.getOrElse(t, 0L)).sum).toMap
         }
+        val consolidated = groups.sortBy(g => (g._1, g._2.mkString(",")))
+            .flatMap { case (c, keyFiles, targets) =>
+          if (keyFiles.size == 1) // already minimal for these targets: the
+            // original key file carries, restricted to exactly this group
+            Seq(DvEntry(keyFiles.head, c, targets.toSet,
+              countsFor(c, keyFiles, targets)))
+          else if (c == "_pos") {
+            // positional markers OR their roaring bitmaps per target ON
+            // THE DRIVER — each positions file is compressed and bounded
+            // by graft.dv.maxBytes, so the merge is metadata-scale work
+            // (no Spark job); targets restrict naturally because lookups
+            // key by the target's basename
+            val merged = targets.map { t =>
+              val rb = new org.roaringbitmap.RoaringBitmap()
+              keyFiles.foreach(f =>
+                rb.or(DvKeyCache.doomedPositions(dataPath(dir, f), t)))
+              rb.runOptimize()
+              DvKeyCache.baseName(t) -> rb
+            }.filter(!_._2.isEmpty)
+            // a merged positions file past the per-file byte budget would
+            // make every subsequent scan REFUSE (the loader's loud
+            // maxBytes bound counts the WHOLE file) — decline merging
+            // this group and keep its original markers: reads stay
+            // exactly as fast as before, and the consolidation of other
+            // groups still lands
+            if (merged.map(_._2.serializedSizeInBytes().toLong).sum >
+                DvKeyCache.maxDvBytes)
+              keyFiles.map(f => DvEntry(f, c, targets.toSet))
+            else {
+              val staged = GraftDeltaWriter.writePositionsFile(
+                dir, merged.iterator, "merged")
+              Seq(DvEntry(staged, c, targets.toSet))
+            }
+          } else {
+            import org.apache.spark.sql.functions.{col => fcol}
+            // keyed markers union their single key column
+            val union = s.read.parquet(keyFiles.map(dataPath(dir, _)): _*)
+              .select(fcol(c))
+              .distinct().coalesce(1)
+              .persist() // counted once for the budget, staged once — not
+            try {        // two full read+distinct passes
+              // a merged key file past the reader's per-file budget would
+              // make every subsequent scan of the targeted files REFUSE
+              // (DvKeyCache.doomed's loud maxKeys bound) — decline merging
+              // this group and keep its original markers, same contract
+              // as the positional byte-budget decline
+              if (union.count() > DvKeyCache.maxKeys)
+                keyFiles.map(f => DvEntry(f, c, targets.toSet,
+                  countsFor(c, Seq(f), targets)))
+              else {
+                val staged = stage(s, dir, union)
+                require(staged.size == 1)
+                Seq(DvEntry(staged.head, c, targets.toSet,
+                  countsFor(c, keyFiles, targets)))
+              }
+            } finally union.unpersist(false)
+          }
+        }
+        Some(cur.copy(dvs = consolidated) -> Kind.Rewrite)
       }
-      val body = listLines(dir, v) ++ newLines ++
-        renameLines(dir, v) ++ carriedMeta(dir, v)
-      if (commitRewrite(dir, body, v)) return v + 1
-      attempt += 1 // lost the race; staged unions stay harmless orphans
     }
-    throw new IllegalStateException(
-      s"consolidateDvs lost $maxRetries commit races in $dir")
-  }
 
   // ---------------------------------------------------------------------
   // Schema evolution: RENAME COLUMN as carried metadata (the column-
@@ -2479,20 +2331,6 @@ object ManifestTable {
   // is always available.
   // ---------------------------------------------------------------------
 
-  private val RenamePrefix = "#rename\t"
-
-  def renameLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(RenamePrefix)).toSeq
-  }
-
-  /** (from, to) renames of version `v`, in application order. */
-  def renames(dir: String, v: Int): Seq[(String, String)] =
-    renameLines(dir, v).map { l =>
-      val p = l.split('\t'); (p(1), p(2))
-    }
-
   /** Rename side-effects on carried metadata (round 13): dependent
     * property VALUES migrate with the column — the `graft.write.sort/
     * ndv/sum` name lists, the `graft.partitioning` spec's column token,
@@ -2505,10 +2343,26 @@ object ManifestTable {
     * files' physical column of that name would mean a DIFFERENT logical
     * column than new files', an ambiguity no reader can reconcile (the
     * scan would refuse the table forever) — fail the rename instead. */
-  private def guardRenameTarget(dir: String, v: Int, to: String): Unit =
-    require(!renames(dir, v).exists(_._1 == to),
+  private def guardRename(cur: Snapshot, from: String, to: String): Unit = {
+    // a policy referencing the renamed column would silently stop
+    // matching the evolved view — refuse rather than mis-govern
+    require(!cur.policies.exists(_.mentions(from)),
+      s"rename of '$from' refused: a governance policy references it — " +
+        "re-declare the policy against the new name first")
+    require(!cur.renames.exists(_._1 == to),
       s"rename to '$to' refused: the name was already renamed away and " +
         "old files still carry it physically — compact first")
+    // refuse renaming AWAY a name the chain already renamed away once
+    // (RENAME a→b; ADD COLUMN a; RENAME a→c): two chain entries with
+    // the same FROM would make a physical 'a' column AMBIGUOUS —
+    // logical b in pre-re-add files, logical c after — and the
+    // collapsed chain would silently serve old files' b bytes as c.
+    // Like the target guard, compacting first is always available.
+    require(!cur.renames.exists(_._1 == from),
+      s"rename of '$from' refused: the name was renamed away and " +
+        "re-added — old files' physical column means a different " +
+        "logical column; compact first")
+  }
 
   /** Rewrite every reference to column `from` into `to` inside an
     * expression's SQL text — by PARSING and RESOLVING it against the
@@ -2560,26 +2414,24 @@ object ManifestTable {
     })
   }
 
-  private def migrateRenameProps(props: Seq[String],
-      declaredJson: Option[String], from: String, to: String): Seq[String] = {
+  private def migrateRenameProps(props: Seq[(String, String)],
+      declaredJson: Option[String], from: String,
+      to: String): Seq[(String, String)] = {
     val nameRe = ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
     val preSchema = declaredJson.map(j =>
       org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-    props.map { line =>
-      val p = line.split('\t')
-      val k = p(1)
-      val value = if (p.length > 2) p(2) else ""
+    props.map { case (k, value) =>
       def listMigrated: String = value.split(',').map(_.trim)
         .map(n => if (n == from) to else n).mkString(",")
       k match {
         case "graft.write.sort" | "graft.write.ndv" | "graft.write.sum" =>
-          s"$PropPrefix$k\t$listMigrated"
+          k -> listMigrated
         case "graft.partitioning" =>
-          s"$PropPrefix$k\t" + nameRe.replaceAllIn(value,
+          k -> nameRe.replaceAllIn(value,
             java.util.regex.Matcher.quoteReplacement(to))
         case _ if k == s"graft.identity.$from" =>
-          s"${PropPrefix}graft.identity.$to\t$value"
+          s"graft.identity.$to" -> value
         case _ if k.startsWith("graft.constraint.") &&
             nameRe.findFirstIn(
               java.net.URLDecoder.decode(value, "UTF-8")).isDefined =>
@@ -2593,10 +2445,9 @@ object ManifestTable {
             s"rename of '$from' refused: CHECK constraint " +
               s"'${k.stripPrefix("graft.constraint.")}' references it and " +
               "the table has no declared schema to re-resolve it against"))
-          val rewritten = renameInExprSql(pred, pre, from, to)
-          s"$PropPrefix$k\t" +
-            java.net.URLEncoder.encode(rewritten, "UTF-8")
-        case _ => line
+          k -> java.net.URLEncoder.encode(
+            renameInExprSql(pred, pre, from, to), "UTF-8")
+        case _ => k -> value
       }
     }
   }
@@ -2604,58 +2455,8 @@ object ManifestTable {
   /** Publish a column rename as a metadata-only `#mutate` commit (schema
     * changes are inexpressible in an append-only feed — consumers
     * re-bootstrap, the delete/update honesty contract). */
-  def renameColumn(dir: String, from: String, to: String,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to rename in $dir")
-      // a policy referencing the renamed column would silently stop
-      // matching the evolved view — refuse rather than mis-govern
-      // (word-boundary match is conservative: false refusals possible,
-      // silent policy breakage never)
-      val nameRe = ("\\b" + java.util.regex.Pattern.quote(from) + "\\b").r
-      require(!policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
-        s"rename of '$from' refused: a governance policy references it — " +
-          "re-declare the policy against the new name first")
-      guardRenameTarget(dir, v, to)
-      // refuse renaming AWAY a name the chain already renamed away once
-      // (RENAME a→b; ADD COLUMN a; RENAME a→c): two chain entries with
-      // the same FROM would make a physical 'a' column AMBIGUOUS —
-      // logical b in pre-re-add files, logical c after — and the
-      // collapsed chain would silently serve old files' b bytes as c.
-      // Like the target guard, compacting first is always available.
-      require(!renames(dir, v).exists(_._1 == from),
-        s"rename of '$from' refused: the name was renamed away and " +
-          "re-added — old files' physical column means a different " +
-          "logical column; compact first")
-      // the declared schema (empty-table authority) follows the rename;
-      // generation expressions referencing the old name REWRITE to the
-      // new one (round 14) before the field itself renames
-      val evolvedSchema = declaredSchema(dir, v).map { j =>
-        val st = org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val renamed = org.apache.spark.sql.types.StructType(
-          rewriteGenExprs(st, from, to).fields.map(f =>
-            if (f.name == from) f.copy(name = to) else f))
-        s"$SchemaPrefix${renamed.json}"
-      }.toSeq
-      // live deletion vectors carry VERBATIM (round 14): a marker's key
-      // column keeps its name AT DELETE TIME — that name always matches
-      // the staged key parquet's physical column, and readers resolve it
-      // to the evolved name through the rename chain per file generation
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++
-        policyLines(dir, v) ++
-        migrateRenameProps(propLines(dir, v), declaredSchema(dir, v),
-          from, to) ++
-        evolvedSchema ++
-        epochLines(dir, v) :+ s"#rename\t$from\t$to"
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(s"rename lost $maxRetries races in $dir")
-  }
+  def renameColumn(dir: String, from: String, to: String): Int =
+    alterAtomic(dir, Seq(AlterOp.Rename(from, to)))
 
   /** Reconcile a cross-generation scan with the rename chain: coalesce
     * old-name columns into their new names, in marker order. */
@@ -2683,46 +2484,29 @@ object ManifestTable {
   // refuses to silently cross, the same honesty contract as deletes.
   // ---------------------------------------------------------------------
 
-  private val PolicyPrefix = "#policy\t"
-
-  def policyLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(PolicyPrefix)).toSeq
-  }
-
   /** Publish (REPLACING any prior policy set) column masks and an optional
     * row filter, all as SQL expression strings evaluated at read time. */
   def setPolicy(dir: String, masks: Map[String, String],
-      rowFilter: Option[String] = None, maxRetries: Int = 10): Int = {
+      rowFilter: Option[String] = None): Int = {
     (masks.keys ++ masks.values ++ rowFilter).foreach(s =>
       require(!s.contains('\t') && !s.contains('\n'),
         s"policy expressions may not contain tabs/newlines: $s"))
-    val lines = masks.toSeq.sortBy(_._1)
-      .map { case (c, e) => s"#policy\tmask\t$c\t$e" } ++
-      rowFilter.map(e => s"#policy\tfilter\t$e")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to set policy on in $dir")
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ propLines(dir, v) ++
-        schemaLines(dir, v) ++ epochLines(dir, v) ++ lines
-      if (commitMutate(dir, body, v)) return v + 1
-      attempt += 1
+    val policies = masks.toSeq.sortBy(_._1)
+      .map { case (c, e) => Policy(Some(c), e) } ++ rowFilter.map(Policy(None, _))
+    commitLoop(dir, "setPolicy") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to set policy on in $dir")
+      Some(cur.copy(policies = policies) -> Kind.Mutate)
     }
-    throw new IllegalStateException(s"setPolicy lost $maxRetries races in $dir")
   }
 
   /** The governed read: the snapshot with the metadata-carried row filter
     * and column masks applied — what a consumer without raw access gets. */
   def readGoverned(s: SparkSession, dir: String): DataFrame = {
     val v = currentVersion(dir)
-    val base = readVersion(s, dir, v)
-    val pols = policyLines(dir, v).map(_.split('\t'))
-    val filtered = pols.collect { case Array(_, "filter", e) => e }
-      .foldLeft(base)((df, e) => df.filter(expr(e)))
-    pols.collect { case Array(_, "mask", c, e) => (c, e) }
+    val pols = snapshot(dir, v).policies
+    val filtered = pols.collect { case Policy(None, e) => e }
+      .foldLeft(readVersion(s, dir, v))((df, e) => df.filter(expr(e)))
+    pols.collect { case Policy(Some(c), e) => (c, e) }
       .foldLeft(filtered)((df, p) => df.withColumn(p._1, expr(p._2)))
   }
 
@@ -2734,74 +2518,22 @@ object ManifestTable {
   // compaction, restore, and clones; they never materialize away.
   // ---------------------------------------------------------------------
 
-  private val PropPrefix = "#prop\t"
-
-  def propLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(PropPrefix)).toSeq
-  }
-
   /** Current table properties of version `v` as a map. */
   def tableProperties(dir: String, v: Int): Map[String, String] =
-    propLines(dir, v).map { l =>
-      val p = l.split('\t'); p(1) -> (if (p.length > 2) p(2) else "")
-    }.toMap
+    snapshot(dir, v).properties
 
   /** Publish (or replace) one table property. A metadata-only ordinary
     * commit: the data did not change, so the change feed crosses freely. */
-  def setTableProperty(dir: String, key: String, value: String,
-      maxRetries: Int = 10): Int = {
-    require(!key.contains('\t') && !key.contains('\n') &&
-      !value.contains('\t') && !value.contains('\n'),
-      "property keys/values may not contain tabs/newlines")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to set properties on in $dir")
-      val kept = propLines(dir, v).filterNot(_.startsWith(s"$PropPrefix$key\t"))
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ policyLines(dir, v) ++
-        schemaLines(dir, v) ++ epochLines(dir, v) ++ kept :+
-        s"#prop\t$key\t$value"
-      if (commit(dir, body, v)) return v + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(s"setTableProperty lost $maxRetries races in $dir")
-  }
-
-  private val SchemaPrefix = "#schema\t"
-
-  /** The declared schema recorded by `CREATE TABLE` (JSON), if any — the
-    * authority for an EMPTY table, where no data file can answer. Files,
-    * once present, are the ground truth (observed beats declared). */
-  def declaredSchema(dir: String, v: Int): Option[String] = {
-    if (v < 0) return None
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).find(_.startsWith(SchemaPrefix))
-      .map(_.stripPrefix(SchemaPrefix))
-  }
-
-  private def schemaLines(dir: String, v: Int): Seq[String] =
-    declaredSchema(dir, v).map(SchemaPrefix + _).toSeq
+  def setTableProperty(dir: String, key: String, value: String): Int =
+    alterAtomic(dir, Seq(AlterOp.SetProp(key, value)))
 
   /** Drop one table property (no-op commit if absent). */
-  def removeTableProperty(dir: String, key: String,
-      maxRetries: Int = 10): Int = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot in $dir")
-      val kept = propLines(dir, v).filterNot(_.startsWith(s"$PropPrefix$key\t"))
-      if (kept.size == propLines(dir, v).size) return v // absent: no-op
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++
-        renameLines(dir, v) ++ policyLines(dir, v) ++ kept ++
-        schemaLines(dir, v) ++ epochLines(dir, v)
-      if (commit(dir, body, v)) return v + 1
-      attempt += 1
+  def removeTableProperty(dir: String, key: String): Int =
+    commitLoop(dir, "removeTableProperty") { cur =>
+      require(cur.version >= 0, s"no committed snapshot in $dir")
+      if (!cur.properties.contains(key)) None // absent: no-op
+      else Some(cur.withoutProp(key) -> Kind.Data)
     }
-    throw new IllegalStateException(s"removeTableProperty lost $maxRetries races in $dir")
-  }
 
   /** One validated `ALTER TABLE` change, for [[alterAtomic]]. */
   sealed trait AlterOp
@@ -2824,10 +2556,8 @@ object ManifestTable {
     * DDL contract a warehouse user assumes). Ops apply in statement order;
     * renames make the commit a `#mutate` (schema changes are
     * inexpressible in an append-only feed), property-only statements stay
-    * ordinary metadata commits. NOTE: a fifth manual-body method — a new
-    * always-carried marker kind must be added here too (see
-    * [[carriedMeta]]'s scaladoc contract). */
-  def alterAtomic(dir: String, ops: Seq[AlterOp], maxRetries: Int = 10): Int = {
+    * ordinary metadata commits. */
+  def alterAtomic(dir: String, ops: Seq[AlterOp]): Int = {
     // ---- validate EVERYTHING before any commit ----
     ops.foreach {
       case AlterOp.SetProp(k, value) =>
@@ -2855,165 +2585,103 @@ object ManifestTable {
     val addOps = ops.collect { case a: AlterOp.AddCol => a }
     val dropOps = ops.collect { case d: AlterOp.DropCol => d }
     val widenOps = ops.collect { case w: AlterOp.WidenCol => w }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to alter in $dir")
-      if (renameOps.nonEmpty) {
-        renameOps.foreach { r =>
-          val nameRe =
-            ("\\b" + java.util.regex.Pattern.quote(r.from) + "\\b").r
-          require(
-            !policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
-            s"rename of '${r.from}' refused: a governance policy " +
-              "references it — re-declare the policy against the new name " +
-              "first")
-          guardRenameTarget(dir, v, r.to)
-          // two chain entries with the same FROM (rename a→b, re-add
-          // a, rename a→c) would make a physical 'a' ambiguous across
-          // generations — refuse, same contract as renameColumn
-          require(!renames(dir, v).exists(_._1 == r.from),
-            s"rename of '${r.from}' refused: the name was renamed away " +
-              "and re-added — old files' physical column means a " +
-              "different logical column; compact first")
-        }
-      }
-      var props = propLines(dir, v)
-      ops.foreach {
-        case AlterOp.SetProp(k, value) =>
-          props = props.filterNot(_.startsWith(s"$PropPrefix$k\t")) :+
-            s"#prop\t$k\t$value"
-        case AlterOp.RemoveProp(k) =>
-          props = props.filterNot(_.startsWith(s"$PropPrefix$k\t"))
-        case AlterOp.Rename(from, to) =>
-          // dependent declarations follow the rename (or refuse) — the
-          // identity frontier, write-shape name lists, the partitioning
-          // spec; CHECK constraints and generation expressions that
-          // reference the old name refuse the statement
-          props = migrateRenameProps(props, declaredSchema(dir, v), from, to)
-        case _ => () // schema ops handled below
+    commitLoop(dir, "alterAtomic") { cur =>
+      require(cur.version >= 0, s"no committed snapshot to alter in $dir")
+      renameOps.foreach(r => guardRename(cur, r.from, r.to))
+      val props = ops.foldLeft(cur.props) {
+        case (ps, AlterOp.SetProp(k, value)) =>
+          ps.filterNot(_._1 == k) :+ (k -> value)
+        case (ps, AlterOp.RemoveProp(k)) => ps.filterNot(_._1 == k)
+        // dependent declarations follow the rename (or refuse) — the
+        // identity frontier, write-shape name lists, the partitioning
+        // spec; CHECK constraints and generation expressions that
+        // reference the old name are rewritten (or refuse)
+        case (ps, AlterOp.Rename(from, to)) =>
+          migrateRenameProps(ps, cur.schema, from, to)
+        case (ps, _) => ps // schema ops handled below
       }
       // the schema authority to evolve: the declared #schema, else (for
       // ADD COLUMN on a table created by its first insert) the observed
       // footer schema — ADD COLUMN must record a declared schema so the
       // widened view has an authority old files cannot provide
-      val baseSchema: Option[org.apache.spark.sql.types.StructType] =
-        declaredSchema(dir, v)
+      lazy val baseSchema: Option[org.apache.spark.sql.types.StructType] =
+        cur.schema
           .map(org.apache.spark.sql.types.DataType.fromJson(_)
             .asInstanceOf[org.apache.spark.sql.types.StructType])
           .orElse {
-            val files = listFiles(dir, v)
-            if (files.isEmpty) None
-            else Some(ManifestStreamSource.toSparkSchema(
-              ManifestStreamSource.footerSchema(dataPath(dir, files.head))))
+            cur.names.headOption.map(f => ManifestStreamSource.toSparkSchema(
+              ManifestStreamSource.footerSchema(dataPath(dir, f))))
           }
-      if (addOps.nonEmpty || dropOps.nonEmpty || widenOps.nonEmpty)
+      val schemaOps = addOps.nonEmpty || dropOps.nonEmpty || widenOps.nonEmpty
+      if (schemaOps)
         require(baseSchema.isDefined,
           "ADD/DROP/ALTER COLUMN on a table with no schema authority (no " +
             "declared schema and no data files)")
       dropOps.foreach { d =>
-        val nameRe =
-          ("\\b" + java.util.regex.Pattern.quote(d.name) + "\\b").r
-        require(
-          !policyLines(dir, v).exists(l => nameRe.findFirstIn(l).isDefined),
+        require(!cur.policies.exists(_.mentions(d.name)),
           s"drop of '${d.name}' refused: a governance policy references " +
             "it — re-declare the policy first")
       }
-      val evolvedSchema = baseSchema.map { st0 =>
-        // schema ops apply in STATEMENT order (a rename may precede an
-        // add of the freed name, etc.)
-        val st = ops.foldLeft(st0) {
-          case (st, AlterOp.Rename(from, to)) =>
-            // generation expressions referencing the old name rewrite to
-            // the new one (round 14) before the field itself renames
-            org.apache.spark.sql.types.StructType(
-              rewriteGenExprs(st, from, to).fields.map(f =>
-                if (f.name == from) f.copy(name = to) else f))
-          case (st, AlterOp.AddCol(n, dt, dflt)) =>
-            require(!st.fieldNames.contains(n),
-              s"ADD COLUMN '$n' refused: the column already exists")
-            // a DEFAULT rides the field metadata in the declared schema:
-            // CURRENT_DEFAULT fills future inserts (analyzer-side),
-            // EXISTS_DEFAULT is what pre-addition files serve — the
-            // no-rewrite evolution contract
-            val meta = dflt.map { sql =>
-              import org.apache.spark.sql.catalyst.util.ResolveDefaultColumns._
-              new org.apache.spark.sql.types.MetadataBuilder()
-                .putString(CURRENT_DEFAULT_COLUMN_METADATA_KEY, sql)
-                .putString(EXISTS_DEFAULT_COLUMN_METADATA_KEY, sql)
-                .build()
-            }.getOrElse(org.apache.spark.sql.types.Metadata.empty)
-            st.add(org.apache.spark.sql.types.StructField(n, dt,
-              nullable = true, metadata = meta))
-          // TYPE WIDENING — a declared type change the immutable files
-          // can serve without rewriting: the reader decodes the narrow
-          // physical value and widens it (int32→bigint, float→double,
-          // decimal precision up at fixed scale). Anything else refuses.
-          case (st, AlterOp.WidenCol(n, to)) =>
-            val f = st.fields.find(_.name == n).getOrElse(
-              throw new IllegalArgumentException(
-                s"ALTER COLUMN '$n' TYPE refused: no such column"))
-            require(GraftCatalog.widens(f.dataType, to),
-              s"ALTER COLUMN '$n' TYPE: only widening conversions are " +
-                s"supported (${f.dataType.simpleString} -> " +
-                s"${to.simpleString} is not)")
-            org.apache.spark.sql.types.StructType(st.fields.map(x =>
-              if (x.name == n) x.copy(dataType = to) else x))
-          case (st, AlterOp.DropCol(n)) =>
-            require(st.fieldNames.contains(n),
-              s"DROP COLUMN '$n' refused: no such column")
-            require(st.fields.length > 1,
-              s"DROP COLUMN '$n' refused: a table needs at least one column")
-            org.apache.spark.sql.types.StructType(st.fields.filterNot(_.name == n))
-          case (st, _) => st
+      val evolvedSchema =
+        if (cur.schema.isEmpty && !schemaOps) None
+        else baseSchema.map { st0 =>
+          // schema ops apply in STATEMENT order (a rename may precede an
+          // add of the freed name, etc.)
+          val st = ops.foldLeft(st0) {
+            case (st, AlterOp.Rename(from, to)) =>
+              // generation expressions referencing the old name rewrite to
+              // the new one (round 14) before the field itself renames
+              org.apache.spark.sql.types.StructType(
+                rewriteGenExprs(st, from, to).fields.map(f =>
+                  if (f.name == from) f.copy(name = to) else f))
+            case (st, AlterOp.AddCol(n, dt, dflt)) =>
+              require(!st.fieldNames.contains(n),
+                s"ADD COLUMN '$n' refused: the column already exists")
+              // a DEFAULT rides the field metadata in the declared schema:
+              // CURRENT_DEFAULT fills future inserts (analyzer-side),
+              // EXISTS_DEFAULT is what pre-addition files serve — the
+              // no-rewrite evolution contract
+              val meta = dflt.map { sql =>
+                import org.apache.spark.sql.catalyst.util.ResolveDefaultColumns._
+                new org.apache.spark.sql.types.MetadataBuilder()
+                  .putString(CURRENT_DEFAULT_COLUMN_METADATA_KEY, sql)
+                  .putString(EXISTS_DEFAULT_COLUMN_METADATA_KEY, sql)
+                  .build()
+              }.getOrElse(org.apache.spark.sql.types.Metadata.empty)
+              st.add(org.apache.spark.sql.types.StructField(n, dt,
+                nullable = true, metadata = meta))
+            // TYPE WIDENING — a declared type change the immutable files
+            // can serve without rewriting: the reader decodes the narrow
+            // physical value and widens it (int32→bigint, float→double,
+            // decimal precision up at fixed scale). Anything else refuses.
+            case (st, AlterOp.WidenCol(n, to)) =>
+              val f = st.fields.find(_.name == n).getOrElse(
+                throw new IllegalArgumentException(
+                  s"ALTER COLUMN '$n' TYPE refused: no such column"))
+              require(GraftCatalog.widens(f.dataType, to),
+                s"ALTER COLUMN '$n' TYPE: only widening conversions are " +
+                  s"supported (${f.dataType.simpleString} -> " +
+                  s"${to.simpleString} is not)")
+              org.apache.spark.sql.types.StructType(st.fields.map(x =>
+                if (x.name == n) x.copy(dataType = to) else x))
+            case (st, AlterOp.DropCol(n)) =>
+              require(st.fieldNames.contains(n),
+                s"DROP COLUMN '$n' refused: no such column")
+              require(st.fields.length > 1,
+                s"DROP COLUMN '$n' refused: a table needs at least one column")
+              org.apache.spark.sql.types.StructType(st.fields.filterNot(_.name == n))
+            case (st, _) => st
+          }
+          st.json
         }
-        s"$SchemaPrefix${st.json}"
-      }.filter(_ => declaredSchema(dir, v).isDefined || addOps.nonEmpty ||
-          dropOps.nonEmpty || widenOps.nonEmpty)
-        .toSeq
       // DVs carry VERBATIM through every alter, renames included (round
       // 14): a marker's key column keeps its delete-time name — readers
       // resolve it to the evolved name through the rename chain
-      val body = listLines(dir, v) ++ dvLines(dir, v) ++ renameLines(dir, v) ++
-        renameOps.map(r => s"#rename\t${r.from}\t${r.to}") ++
-        policyLines(dir, v) ++ props ++ evolvedSchema ++ epochLines(dir, v)
-      val ok =
-        if (renameOps.nonEmpty) commitMutate(dir, body, v)
-        else commit(dir, body, v)
-      if (ok) return v + 1
-      attempt += 1
+      Some(cur.copy(props = props, schema = evolvedSchema,
+          renames = cur.renames ++ renameOps.map(r => r.from -> r.to)) ->
+        (if (renameOps.nonEmpty) Kind.Mutate else Kind.Data))
     }
-    throw new IllegalStateException(
-      s"alterAtomic lost $maxRetries commit races in $dir")
   }
-
-  private val EpochPrefix = "#epoch\t"
-
-  /** `#epoch\t<queryId>\t<epochId>` markers: the high-water epoch each
-    * streaming query has committed into this table — the atomically-
-    * carried state that makes `writeStream.toTable` EXACTLY-ONCE (a
-    * replayed epoch ≤ the marker no-ops; the marker rides the same CAS
-    * as the data it covers, so sink state and data can never diverge). */
-  def epochLines(dir: String, v: Int): Seq[String] = {
-    if (v < 0) return Seq.empty
-    new String(Files.readAllBytes(manifestPath(dir, v)), "UTF-8")
-      .split('\n').map(_.trim).filter(_.startsWith(EpochPrefix)).toSeq
-  }
-
-  /** Committed high-water epoch for `queryId` in version `v`, if any. */
-  def committedEpoch(dir: String, v: Int, queryId: String): Option[Long] =
-    epochLines(dir, v).collectFirst {
-      case l if l.split('\t')(1) == queryId => l.split('\t')(2).toLong
-    }
-
-  /** The marker lines EVERY successor commit carries verbatim regardless
-    * of what it does to the data files: governance policies, table
-    * properties, the declared schema, and streaming epoch high-waters
-    * (unlike DV/rename markers, which interact with the file list and are
-    * carried by dedicated, path-specific logic). */
-  private[sources] def carriedMeta(dir: String, v: Int): Seq[String] =
-    policyLines(dir, v) ++ propLines(dir, v) ++ schemaLines(dir, v) ++
-      epochLines(dir, v)
 
   /** MERGE-ON-READ UPSERT (MERGE WHEN MATCHED THEN UPDATE, WHEN NOT
     * MATCHED THEN INSERT) — the Hudi merge-on-read shape: every batch row
@@ -3027,130 +2695,122 @@ object ManifestTable {
     * (the upsert contract — two same-key batch rows would both insert).
     * Returns the new version. */
   def upsertMOR(s: SparkSession, dir: String, batch: DataFrame,
-      col: String, maxRetries: Int = 10,
-      epoch: Option[(String, Long)] = None): Int = {
+      col: String, epoch: Option[(String, Long)] = None): Int =
+    commitLoop(dir, "MOR upsert")(upsertStep(s, dir, batch, col, epoch, _))
+
+  private def upsertStep(s: SparkSession, dir: String, batch: DataFrame,
+      col: String, epoch: Option[(String, Long)],
+      cur: Snapshot): Option[(Snapshot, Kind)] = {
     import org.apache.spark.sql.functions.{col => c, min => fmin, max => fmax}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to upsert into in $dir")
-      // exactly-once streaming leg (round 16): when the batch carries an
-      // epoch, a replayed epoch ≤ the committed high-water no-ops BEFORE
-      // staging a byte, and the new high-water marker rides the SAME
-      // #mutate CAS as the upsert itself — sink state and data cannot
-      // diverge (the #epoch contract of the V2 streaming sink, extended
-      // to in-place MOR corrections)
-      epoch.foreach { case (qid, eid) =>
-        if (committedEpoch(dir, v, qid).exists(_ >= eid)) return v
-      }
-      // rename markers compose (round 14): the batch arrives under the
-      // EVOLVED names (it must — it inserts as the new generation), and
-      // pre-rename files' stats are consulted under the key column's
-      // whole alias family
-      val keyFamily = aliasFamily(dir, v, col)
-      require(keyFamily.head == col,
-        s"upsertMOR key column '$col' was renamed to '${keyFamily.head}' — " +
-          "upsert under the evolved name")
-      // target = files whose recorded range intersects the batch key span
-      // (1-row bound collect; no key list reaches the driver). The same
-      // pass enforces the ROW-IDENTITY contract for every upsert entry
-      // point (round 17): a NULL key is a malformed correction — passing
-      // it through would either vanish the batch (all-null span used to
-      // read as "empty batch" and no-op after the source was consumed)
-      // or land un-amendable rows no later correction can target.
-      val span = batch.agg(
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.count(c(col)),
-        fmin(c(col)), fmax(c(col))).head()
-      if (span.getLong(0) == 0L) return v // empty batch: idempotent no-op
-      require(span.getLong(1) == span.getLong(0),
-        s"upsertMOR into $dir: ${span.getLong(0) - span.getLong(1)} of " +
-          s"${span.getLong(0)} rows carry a NULL '$col' key — an upsert " +
-          "key is a row identity; fix the feed or append instead")
-      // numeric-tolerant extraction: the key column may be any integral /
-      // decimal / floating type, not just BIGINT (the stats machinery is
-      // BigDecimal-typed for the same reason)
-      def num(a: Any): BigDecimal = a match {
-        case l: java.lang.Long => BigDecimal(l.longValue)
-        case i: java.lang.Integer => BigDecimal(i.intValue)
-        case s: java.lang.Short => BigDecimal(s.intValue)
-        case b: java.lang.Byte => BigDecimal(b.intValue)
-        // a NaN key is as un-amendable an identity as NULL (NaN never
-        // equals itself in a join), and Spark orders NaN GREATEST, so
-        // any NaN key surfaces here as the span max — refuse with the
-        // same named row-identity contract, not a bare
-        // NumberFormatException from BigDecimal
-        case d: java.lang.Double if d.isNaN || d.isInfinite =>
-          throw new IllegalArgumentException(
-            s"upsertMOR into $dir: the '$col' key span contains $d — " +
-              "an upsert key is a row identity; NaN/Infinite keys " +
-              "cannot be targeted by later corrections")
-        case f: java.lang.Float if f.isNaN || f.isInfinite =>
-          throw new IllegalArgumentException(
-            s"upsertMOR into $dir: the '$col' key span contains $f — " +
-              "an upsert key is a row identity; NaN/Infinite keys " +
-              "cannot be targeted by later corrections")
-        case d: java.lang.Double => BigDecimal(d.doubleValue)
-        case f: java.lang.Float => BigDecimal(f.doubleValue)
-        case bd: java.math.BigDecimal => BigDecimal(bd)
-        case x => throw new IllegalArgumentException(
-          s"upsertMOR key column '$col' has non-numeric type ${x.getClass}")
-      }
-      val (lo, hi) = (num(span.get(2)), num(span.get(3)))
-      val affected = listLines(dir, v).map(parseEntry)
-        .filter(e => keyFamily.flatMap(e.ranges.get).headOption
-          .forall(r => r.max >= lo && r.min <= hi))
-        .map(_.name).toSet
-      // The staged key write, the staged data write, and the doomed-live
-      // counting pass are three INDEPENDENT distributed actions (disjoint
-      // unique output paths, no shared intermediate): overlap them on the
-      // driver pool instead of serializing three job latencies (guide
-      // §2.6). Results and commit order are unchanged — everything joins
-      // before the CAS.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext = overlapEc
-        val dvF = Future(stage(s, dir, batch.select(c(col)).distinct()))
-        val dataF = Future(stageWithStats(s, dir, batch, Seq(col)))
-        val hitsF = Future(
-          if (affected.isEmpty) Map.empty[String, Long]
-          else doomedLiveCounts(s, dir, v, affected.toSeq, col,
-            batch.select(c(col)).distinct()))
-        val dvFiles = Await.result(dvF, Duration.Inf)
-        val dataFiles = Await.result(dataF, Duration.Inf)
-        val markers =
-          if (affected.isEmpty) Seq.empty // pure insert: nothing to doom
-          else {
-            // price the statement's doomed-live hits per candidate file so
-            // the metadata COUNT/history/LIMIT tiers survive the upsert.
-            // The batch's keys may stage as SEVERAL files (no coalesce
-            // bottleneck at scale) — every consumer SUMS counts across
-            // markers per target, so the statement's total rides on the
-            // first marker and the rest carry explicit zeros
-            val hits = Await.result(hitsF, Duration.Inf)
-            val zero = affected.map(n => n -> 0L).toMap
-            dvFiles.zipWithIndex.map { case (f, i) =>
-              encodeDv(DvEntry(f, col, affected,
-                if (i == 0) affected.map(n =>
-                  n -> hits.getOrElse(n, 0L)).toMap
-                else zero))
-            }
-          }
-        val meta = epoch match {
-          case Some((qid, eid)) =>
-            carriedMeta(dir, v).filterNot(_.startsWith(s"$EpochPrefix$qid\t")) :+
-              s"$EpochPrefix$qid\t$eid"
-          case None => carriedMeta(dir, v)
-        }
-        val body = listLines(dir, v) ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ meta ++ dataFiles ++ markers
-        if (commitMutate(dir, body, v)) return v + 1
-      }
-      attempt += 1 // lost the race; staged files stay harmless orphans
+    require(cur.version >= 0, s"no committed snapshot to upsert into in $dir")
+    // exactly-once streaming leg (round 16): when the batch carries an
+    // epoch, a replayed epoch ≤ the committed high-water no-ops BEFORE
+    // staging a byte, and the new high-water marker rides the SAME
+    // #mutate CAS as the upsert itself — sink state and data cannot
+    // diverge (the #epoch contract of the V2 streaming sink, extended
+    // to in-place MOR corrections)
+    if (epoch.exists { case (qid, eid) => cur.epoch(qid).exists(_ >= eid) })
+      return None
+    // rename markers compose (round 14): the batch arrives under the
+    // EVOLVED names (it must — it inserts as the new generation), and
+    // pre-rename files' stats are consulted under the key column's
+    // whole alias family
+    val keyFamily = cur.aliasFamily(col)
+    require(keyFamily.head == col,
+      s"upsertMOR key column '$col' was renamed to '${keyFamily.head}' — " +
+        "upsert under the evolved name")
+    // target = files whose recorded range intersects the batch key span
+    // (1-row bound collect; no key list reaches the driver). The same
+    // pass enforces the ROW-IDENTITY contract for every upsert entry
+    // point (round 17): a NULL key is a malformed correction — passing
+    // it through would either vanish the batch (all-null span used to
+    // read as "empty batch" and no-op after the source was consumed)
+    // or land un-amendable rows no later correction can target.
+    val span = batch.agg(
+      org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)),
+      org.apache.spark.sql.functions.count(c(col)),
+      fmin(c(col)), fmax(c(col))).head()
+    if (span.getLong(0) == 0L) return None // empty batch: idempotent no-op
+    require(span.getLong(1) == span.getLong(0),
+      s"upsertMOR into $dir: ${span.getLong(0) - span.getLong(1)} of " +
+        s"${span.getLong(0)} rows carry a NULL '$col' key — an upsert " +
+        "key is a row identity; fix the feed or append instead")
+    // numeric-tolerant extraction: the key column may be any integral /
+    // decimal / floating type, not just BIGINT (the stats machinery is
+    // BigDecimal-typed for the same reason)
+    def num(a: Any): BigDecimal = a match {
+      case l: java.lang.Long => BigDecimal(l.longValue)
+      case i: java.lang.Integer => BigDecimal(i.intValue)
+      case s: java.lang.Short => BigDecimal(s.intValue)
+      case b: java.lang.Byte => BigDecimal(b.intValue)
+      // a NaN key is as un-amendable an identity as NULL (NaN never
+      // equals itself in a join), and Spark orders NaN GREATEST, so
+      // any NaN key surfaces here as the span max — refuse with the
+      // same named row-identity contract, not a bare
+      // NumberFormatException from BigDecimal
+      case d: java.lang.Double if d.isNaN || d.isInfinite =>
+        throw new IllegalArgumentException(
+          s"upsertMOR into $dir: the '$col' key span contains $d — " +
+            "an upsert key is a row identity; NaN/Infinite keys " +
+            "cannot be targeted by later corrections")
+      case f: java.lang.Float if f.isNaN || f.isInfinite =>
+        throw new IllegalArgumentException(
+          s"upsertMOR into $dir: the '$col' key span contains $f — " +
+            "an upsert key is a row identity; NaN/Infinite keys " +
+            "cannot be targeted by later corrections")
+      case d: java.lang.Double => BigDecimal(d.doubleValue)
+      case f: java.lang.Float => BigDecimal(f.doubleValue)
+      case bd: java.math.BigDecimal => BigDecimal(bd)
+      case x => throw new IllegalArgumentException(
+        s"upsertMOR key column '$col' has non-numeric type ${x.getClass}")
     }
-    throw new IllegalStateException(s"MOR upsert lost $maxRetries races in $dir")
+    val (lo, hi) = (num(span.get(2)), num(span.get(3)))
+    val affected = cur.entries
+      .filter(e => keyFamily.flatMap(e.ranges.get).headOption
+        .forall(r => r.max >= lo && r.min <= hi))
+      .map(_.name).toSet
+    // The staged key write, the staged data write, and the doomed-live
+    // counting pass are three INDEPENDENT distributed actions (disjoint
+    // unique output paths, no shared intermediate): overlap them on the
+    // driver pool instead of serializing three job latencies (guide
+    // §2.6). Results and commit order are unchanged — everything joins
+    // before the CAS.
+    locally {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: scala.concurrent.ExecutionContext = overlapEc
+      val dvF = Future(stage(s, dir, batch.select(c(col)).distinct()))
+      val dataF = Future(stageWithStats(s, dir, batch, Seq(col)))
+      val hitsF = Future(
+        if (affected.isEmpty) Map.empty[String, Long]
+        else doomedLiveCounts(s, dir, cur, affected.toSeq, col,
+          batch.select(c(col)).distinct()))
+      val dvFiles = Await.result(dvF, Duration.Inf)
+      val dataFiles = Await.result(dataF, Duration.Inf)
+      val markers =
+        if (affected.isEmpty) Seq.empty // pure insert: nothing to doom
+        else {
+          // price the statement's doomed-live hits per candidate file so
+          // the metadata COUNT/history/LIMIT tiers survive the upsert.
+          // The batch's keys may stage as SEVERAL files (no coalesce
+          // bottleneck at scale) — every consumer SUMS counts across
+          // markers per target, so the statement's total rides on the
+          // first marker and the rest carry explicit zeros
+          val hits = Await.result(hitsF, Duration.Inf)
+          val zero = affected.map(n => n -> 0L).toMap
+          dvFiles.zipWithIndex.map { case (f, i) =>
+            DvEntry(f, col, affected,
+              if (i == 0) affected.map(n =>
+                n -> hits.getOrElse(n, 0L)).toMap
+              else zero)
+          }
+        }
+      val next = cur.copy(files = cur.files ++ dataFiles,
+        dvs = cur.dvs ++ markers)
+      Some(epoch.fold(next) { case (q, e) => next.withEpoch(q, e) } ->
+        Kind.Mutate)
+    }
   }
 
   /** Metadata-only pruning for `col IN keys` using both stat kinds: a file
@@ -3159,16 +2819,20 @@ object ManifestTable {
     * scan). Returns (kept file names, total files). */
   def pruneFilesForKeys(dir: String, v: Int, col: String,
       keys: Seq[Long]): (Seq[String], Int) = {
-    val entries = listLines(dir, v).map(parseEntry)
-    val kept = entries.filter { e =>
-      val rangeOk = e.ranges.get(col).forall(r =>
-        keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max))
-      val bloomOk = e.blooms.get(col).forall(bf =>
-        keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      rangeOk && bloomOk
-    }.map(_.name)
-    (kept, entries.size)
+    val entries = snapshot(dir, v).entries
+    (entries.filter(mayHoldKeys(_, Seq(col), keys)).map(_.name), entries.size)
   }
+
+  /** Whether file (or segment) `e` may hold any of `keys` in the column
+    * named by `family` (its names across the rename chain): some key
+    * inside its recorded range AND admitted by its Bloom index; an absent
+    * stat admits (degrade to scan, never to a wrong answer). */
+  private def mayHoldKeys(e: FileEntry, family: Seq[String],
+      keys: Seq[Long]): Boolean =
+    family.flatMap(e.ranges.get).headOption.forall(r =>
+      keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
+    family.flatMap(e.blooms.get).headOption.forall(bf =>
+      keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
 
   /** Point-lookup read: bloom+range file pruning, then the exact residual
     * `col IN keys` filter over only the surviving files. */
@@ -3178,7 +2842,7 @@ object ManifestTable {
     val v = currentVersion(dir)
     val (kept, _) = pruneFilesForKeys(dir, v, col, keys)
     if (kept.isEmpty) readVersion(s, dir, v).filter(lit(false))
-    else readWithDvs(s, dir, v, kept)
+    else readWithDvs(s, dir, snapshot(dir, v), kept)
       .filter(c(col).isin(keys: _*))
   }
 
@@ -3199,42 +2863,12 @@ object ManifestTable {
     * keeps working after the delete. Returns the new committed version
     * (or the current one if no file can contain any key — a metadata-only
     * no-op). */
-  def deleteKeys(s: SparkSession, dir: String, col: String, keys: Seq[Long],
-      maxRetries: Int = 10): Int = {
+  def deleteKeys(s: SparkSession, dir: String, col: String,
+      keys: Seq[Long]): Int = {
     import org.apache.spark.sql.functions.{col => c}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to delete from in $dir")
-      require(renameLines(dir, v).isEmpty,
-        "copy-on-write delete under a pending rename is refused — compact first")
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        e.ranges.get(col).forall(r =>
-          keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
-        e.blooms.get(col).forall(bf =>
-          keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      }
-      if (affected.isEmpty) return v // nothing can hold the keys: no-op
-      val affectedNames = affected.map(_.name).toSet
-      val keep = listLines(dir, v) // raw lines: untouched stats ride along
-        .filterNot(l => affectedNames.contains(l.split('\t').head))
-      val survivors = readWithDvs(s, dir, v, affected.map(_.name).toSeq)
-        .filter(!c(col).isin(keys: _*))
-      // rewrites carry the same stat kinds the originals did (string
-      // envelopes included — a rewrite must not silently stop pruning)
-      val statsCols = affected
-        .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
-      val bloomCols = affected.flatMap(_.blooms.keys).distinct
-      val staged =
-        if (survivors.isEmpty) Seq.empty[String]
-        else stageWithIndexes(s, dir, survivors, statsCols, bloomCols)
-      val carried = carriedDvLines(dir, v,
-        keep.map(_.split('\t').head).toSet) ++ carriedMeta(dir, v)
-      if (commitMutate(dir, keep ++ staged ++ carried, v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
-    }
-    throw new IllegalStateException(s"delete lost $maxRetries commit races in $dir")
+    // a delete that removed every row stages nothing
+    cowRewrite(s, dir, col, keys, "delete")(df =>
+      Some(df.filter(!c(col).isin(keys: _*))).filterNot(_.isEmpty))
   }
 
   /** Copy-on-write UPDATE (`UPDATE SET c = expr WHERE col IN keys`) — the
@@ -3248,42 +2882,44 @@ object ManifestTable {
     * per matching row. Returns the new committed version (current version
     * if no file can hold any key). */
   def updateKeys(s: SparkSession, dir: String, col: String, keys: Seq[Long],
-      assignments: Map[String, Column], maxRetries: Int = 10): Int = {
+      assignments: Map[String, Column]): Int = {
     import org.apache.spark.sql.functions.{col => c, when}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to update in $dir")
-      require(renameLines(dir, v).isEmpty,
-        "copy-on-write update under a pending rename is refused — compact first")
-      val entries = listLines(dir, v).map(parseEntry)
-      val affected = entries.filter { e =>
-        e.ranges.get(col).forall(r =>
-          keys.exists(x => BigDecimal(x) >= r.min && BigDecimal(x) <= r.max)) &&
-        e.blooms.get(col).forall(bf =>
-          keys.exists(x => graft.functions.BloomSketch.contains(bf, x)))
-      }
-      if (affected.isEmpty) return v
-      val affectedNames = affected.map(_.name).toSet
-      val keep = listLines(dir, v)
-        .filterNot(l => affectedNames.contains(l.split('\t').head))
-      val hit = c(col).isin(keys: _*)
-      // all assignments read OLD values (standard UPDATE semantics):
-      // withColumns resolves every expression against the pre-update rows
-      val rewritten = readWithDvs(s, dir, v, affected.map(_.name).toSeq)
-        .withColumns(assignments.map { case (t, e) =>
-          t -> when(hit, e).otherwise(c(t)) })
-      val statsCols = affected
-        .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
-      val bloomCols = affected.flatMap(_.blooms.keys).distinct
-      val staged = stageWithIndexes(s, dir, rewritten, statsCols, bloomCols)
-      val carried = carriedDvLines(dir, v,
-        keep.map(_.split('\t').head).toSet) ++ carriedMeta(dir, v)
-      if (commitMutate(dir, keep ++ staged ++ carried, v)) return v + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(s"update lost $maxRetries commit races in $dir")
+    val hit = c(col).isin(keys: _*)
+    // all assignments read OLD values (standard UPDATE semantics):
+    // withColumns resolves every expression against the pre-update rows
+    cowRewrite(s, dir, col, keys, "update")(df => Some(df.withColumns(
+      assignments.map { case (t, e) => t -> when(hit, e).otherwise(c(t)) })))
   }
+
+  /** The copy-on-write rewrite [[deleteKeys]] and [[updateKeys]] share:
+    * the files whose range+bloom stats may hold `keys` are read with
+    * their DVs applied, `rewrite` maps their rows (None: nothing left to
+    * stage), and the result stages
+    * with the same stat kinds the originals carried (string envelopes
+    * included — a rewrite must not silently stop pruning). Untouched
+    * lines and the DVs still targeting them carry; one `#mutate` CAS. */
+  private def cowRewrite(s: SparkSession, dir: String, col: String,
+      keys: Seq[Long], what: String)(
+      rewrite: DataFrame => Option[DataFrame]): Int =
+    commitLoop(dir, what) { cur =>
+      require(cur.version >= 0, s"no committed snapshot to $what in $dir")
+      require(cur.renames.isEmpty,
+        s"copy-on-write $what under a pending rename is refused — compact first")
+      val affected = cur.entries.filter(mayHoldKeys(_, Seq(col), keys))
+      if (affected.isEmpty) None // nothing can hold the keys: no-op
+      else {
+        val affectedNames = affected.map(_.name).toSet
+        val statsCols = affected
+          .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
+        val bloomCols = affected.flatMap(_.blooms.keys).distinct
+        val staged = rewrite(readWithDvs(s, dir, cur, affected.map(_.name)))
+          .map(stageWithIndexes(s, dir, _, statsCols, bloomCols))
+          .getOrElse(Seq.empty)
+        val keep = cur.withFiles(cur.files.filterNot(l =>
+          affectedNames.contains(nameOf(l))))
+        Some(keep.copy(files = keep.files ++ staged) -> Kind.Mutate)
+      }
+    }
 
   /** Metadata-only file pruning for `col BETWEEN lo AND hi` (inclusive):
     * (files that may hold matches, total files in the snapshot). A file is
@@ -3291,11 +2927,9 @@ object ManifestTable {
     * without stats for `col` always survive. */
   def pruneFiles(dir: String, v: Int, col: String,
       lo: BigDecimal, hi: BigDecimal): (Seq[String], Int) = {
-    val entries = listLines(dir, v).map(parseLine)
-    val kept = entries.collect {
-      case (name, st) if st.get(col).forall(r => r.max >= lo && r.min <= hi) => name
-    }
-    (kept, entries.size)
+    val entries = snapshot(dir, v).entries
+    (entries.filter(_.ranges.get(col).forall(r => r.max >= lo && r.min <= hi))
+      .map(_.name), entries.size)
   }
 
   /** Pruned snapshot read: resolve the manifest, drop files whose recorded
@@ -3306,19 +2940,19 @@ object ManifestTable {
   def readPruned(s: SparkSession, dir: String, col: String,
       lo: BigDecimal, hi: BigDecimal): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, lit}
-    val v = currentVersion(dir)
-    val (kept, _) = pruneFiles(dir, v, col, lo, hi)
+    val snap = head(dir)
+    val (kept, _) = pruneFiles(dir, snap.version, col, lo, hi)
     // typed literals so the residual comparison stays cast-free on the
     // column side and reaches the parquet scan as a pushed filter
-    val isLong = listLines(dir, v).map(parseLine)
-      .flatMap(_._2.get(col)).headOption.forall(_.tag == 'L')
+    val isLong = snap.entries
+      .flatMap(_.ranges.get(col)).headOption.forall(_.tag == 'L')
     val pred =
       if (isLong && lo.isWhole && hi.isWhole)
         c(col) >= lit(lo.toLongExact) && c(col) <= lit(hi.toLongExact)
       else c(col) >= lit(lo.toDouble) && c(col) <= lit(hi.toDouble)
     if (kept.isEmpty) // keep the snapshot schema, provably-empty result
-      readVersion(s, dir, v).filter(lit(false))
-    else readWithDvs(s, dir, v, kept).filter(pred)
+      readVersion(s, dir, snap.version).filter(lit(false))
+    else readWithDvs(s, dir, snap, kept).filter(pred)
   }
 
   // ---------------------------------------------------------------------
@@ -3337,50 +2971,46 @@ object ManifestTable {
   private def auditPath(dir: String, tag: String): Path =
     Paths.get(dir, s"audit-$tag.json")
 
-  /** Stage `batch` into audit snapshot `tag` (base = current version). */
+  /** Stage `batch` into audit snapshot `tag` (base = current version):
+    * the would-be successor snapshot, rendered after a `#base=<v>` line. */
   def stageAudit(s: SparkSession, dir: String, batch: DataFrame,
       tag: String, statsCols: Seq[String] = Nil): Unit = {
-    val v = currentVersion(dir)
-    require(renameLines(dir, v).isEmpty,
+    val cur = head(dir)
+    require(cur.renames.isEmpty,
       "write-audit-publish under a pending rename is refused — compact first")
     val staged =
       if (statsCols.nonEmpty) stageWithStats(s, dir, batch, statsCols)
       else stage(s, dir, batch)
-    val lines = s"#base=$v" +: (listLines(dir, v) ++ staged ++
-      dvLines(dir, v) ++ carriedMeta(dir, v))
-    Files.write(auditPath(dir, tag), lines.mkString("\n").getBytes("UTF-8"))
+    val audit = cur.copy(files = cur.files ++ staged, ts = None)
+    Files.write(auditPath(dir, tag),
+      s"#base=${cur.version}\n${render(audit, Kind.Data)}".getBytes("UTF-8"))
   }
 
-  private def auditLines(dir: String, tag: String): (Int, Seq[String]) = {
+  private def auditSnapshot(dir: String, tag: String): Snapshot = {
     val p = auditPath(dir, tag)
     require(Files.exists(p), s"no audit snapshot '$tag' in $dir")
-    val all = new String(Files.readAllBytes(p), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-    val base = all.head.stripPrefix("#base=").toInt
-    (base, all.tail)
+    val (base, body) =
+      new String(Files.readAllBytes(p), "UTF-8").span(_ != '\n')
+    parse(dir, base.trim.stripPrefix("#base=").toInt, body)
   }
 
   /** Read the audit snapshot: the exact table state `tag` would publish
     * (deletion-vector markers in the audit apply here too — the checks
     * must see what production would see). */
   def readAudit(s: SparkSession, dir: String, tag: String): DataFrame = {
-    val (_, lines) = auditLines(dir, tag)
-    val dvs = lines.filter(_.startsWith(DvPrefix))
-    // every OTHER marker line (#policy, #rename, future kinds) is metadata,
-    // not a data file — only unprefixed lines name parquet under data/
-    val data = lines.filterNot(_.startsWith("#"))
-    applyDvs(s, dir, data.map(_.split('\t').head), dvs.map(parseDvLine))
+    val audit = auditSnapshot(dir, tag)
+    applyDvs(s, dir, audit.names, audit.dvs)
   }
 
   /** Publish a passing audit atomically. Returns the new version, or None
     * if a concurrent commit moved the base — the caller must re-stage and
     * RE-AUDIT against the new base (never publish stale checks). */
   def publishAudit(dir: String, tag: String): Option[Int] = {
-    val (base, lines) = auditLines(dir, tag)
-    if (currentVersion(dir) != base) return None
-    if (commit(dir, lines, base)) {
+    val audit = auditSnapshot(dir, tag)
+    if (currentVersion(dir) != audit.version) return None
+    if (publish(dir, audit, Kind.Data)) {
       Files.deleteIfExists(auditPath(dir, tag))
-      Some(base + 1)
+      Some(audit.version + 1)
     } else None
   }
 
@@ -3498,34 +3128,32 @@ object ManifestTable {
     * fewer than 2 small files — nothing worth rewriting). */
   def optimize(s: SparkSession, dir: String, numFiles: Int = 1,
       zorderBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
-      smallFileBytes: Long = Long.MaxValue, maxRetries: Int = 10,
+      smallFileBytes: Long = Long.MaxValue,
       onlyFiles: Option[Set[String]] = None): Int = {
     import org.apache.spark.sql.functions.{col => c}
     require(zorderBy.isEmpty || zorderBy.size == 2,
       "zorderBy takes exactly two integral columns (Morton interleave)")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to optimize in $dir")
-      val lines = listLines(dir, v)
+    def step(cur: Snapshot): Option[(Snapshot, Kind)] = {
+      require(cur.version >= 0, s"no committed snapshot to optimize in $dir")
+      val lines = cur.files
       // `onlyFiles` scopes the rewrite (partition-targeted maintenance):
       // a file outside the set keeps its manifest line verbatim no
       // matter its size
       val (small, big) = lines.partition { l =>
-        val name = l.split('\t').head
+        val name = nameOf(l)
         onlyFiles.forall(_.contains(name)) &&
           Files.size(Paths.get(dataPath(dir, name))) < smallFileBytes
       }
       // nothing worth rewriting (zorder with zero admitted files included:
       // reading an empty path list would throw, and the layout is a no-op)
-      if (small.size < 2 && zorderBy.isEmpty) return v
-      if (small.isEmpty) return v
+      if (small.size < 2 && zorderBy.isEmpty) return None
+      if (small.isEmpty) return None
       // DV-aware read MATERIALIZES deletes into the rewritten files; the
       // untouched big files keep their (intersected) markers below. Under
       // a rename chain the rewrite reads the EVOLVED view, so rewritten
       // files carry the new names while the carried markers keep
       // reconciling the untouched old ones — DVs and renames compose.
-      val df = readFilesReconciled(s, dir, v, small.map(_.split('\t').head))
+      val df = readFilesReconciled(s, dir, cur, small.map(nameOf))
       val laid = zorderBy match {
         case Seq(a, b) =>
           df.withColumn("__zkey",
@@ -3538,7 +3166,7 @@ object ManifestTable {
       // rewrite drops a file's sketches/sums (the delta writer can't
       // recompute them), and compaction is where the metadata tier
       // re-arms — the same degrade-then-maintain story as bucket ids
-      val props = tableProperties(dir, v)
+      val props = cur.properties
       def declared(key: String): Seq[String] = props.get(key).toSeq
         .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
         .filter(df.columns.contains)
@@ -3549,13 +3177,12 @@ object ManifestTable {
           stageWithIndexes(s, dir, laid, statsCols = statsCols,
             bloomCols = Nil, ndvCols = ndvC, sumCols = sumC)
         else stage(s, dir, laid)
-      val carried = carriedDvLines(dir, v, big.map(_.split('\t').head).toSet) ++
-        (if (big.isEmpty) Seq.empty else renameLines(dir, v)) ++
-        carriedMeta(dir, v) // policies/properties never materialize away
-      if (commitRewrite(dir, big ++ staged ++ carried, v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+      // untouched big files keep their DVs (restricted to them) and, if
+      // any old-generation file is left, the rename chain
+      Some(cur.withFiles(big ++ staged).copy(
+        renames = if (big.isEmpty) Nil else cur.renames) -> Kind.Rewrite)
     }
-    throw new IllegalStateException(s"optimize lost $maxRetries commit races in $dir")
+    commitLoop(dir, "optimize")(step)
   }
 
   /** Restore a bucketed table's physical layout: rewrite EVERY file
@@ -3582,28 +3209,26 @@ object ManifestTable {
     * New inserts route/cluster by the new spec immediately. Every
     * referenced column must exist in the table's evolved view — refused
     * otherwise. Returns the new version. */
-  def setPartitioning(dir: String, spec: String, maxRetries: Int = 10): Int = {
+  def setPartitioning(dir: String, spec: String): Int = {
     val (ids, bks) = GraftCatalog.partitionCols(spec)
     val times = GraftCatalog.timeCols(spec)
     val clus = GraftCatalog.clusterCols(spec)
     require(ids.nonEmpty || bks.nonEmpty || times.nonEmpty || clus.nonEmpty,
       s"unparseable partitioning spec '$spec' — expected " +
         "identity(c) / bucket(n, c) / years|months|days(c) / cluster(...)")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to alter in $dir")
+    def step(cur: Snapshot): Option[(Snapshot, Kind)] = {
+      require(cur.version >= 0, s"no committed snapshot to alter in $dir")
       // column authority: the declared schema if any, else the observed
       // footer names of one file, both through the rename chain's final
       // names — a spec naming an absent column refuses now, not at the
       // first insert that cannot route
-      val fin = finalNames(dir, v)
+      val fin = cur.finalNames
       val authority: Option[Set[String]] =
-        declaredSchema(dir, v)
+        cur.schema
           .map(org.apache.spark.sql.types.DataType.fromJson(_)
             .asInstanceOf[org.apache.spark.sql.types.StructType]
             .fieldNames.toSet)
-          .orElse(listFiles(dir, v).headOption.map { f =>
+          .orElse(cur.names.headOption.map { f =>
             val mt = ManifestStreamSource.footerSchema(dataPath(dir, f))
             (0 until mt.getFieldCount).map(i =>
               fin.getOrElse(mt.getFieldName(i), mt.getFieldName(i))).toSet
@@ -3612,48 +3237,34 @@ object ManifestTable {
       authority.foreach(cols => refd.foreach(c => require(cols(c),
         s"SET partitioning '$spec' refused: column '$c' does not exist " +
           s"on $dir")))
-      val oldBks = tableProperties(dir, v).get("graft.partitioning")
+      val oldBks = cur.properties.get("graft.partitioning")
         .map(GraftCatalog.partitionCols(_)._2).getOrElse(Seq.empty)
       val bucketChanged = oldBks != bks
-      val lines =
-        if (!bucketChanged) listLines(dir, v)
-        else listLines(dir, v).map(_.replaceAll(";__bucket=\\d+", ""))
-      val props = propLines(dir, v)
-        .filterNot(_.startsWith("#prop\tgraft.partitioning\t")) :+
-        s"#prop\tgraft.partitioning\t$spec"
-      val body = lines ++ dvLines(dir, v) ++ renameLines(dir, v) ++
-        policyLines(dir, v) ++ props ++ schemaLines(dir, v) ++
-        epochLines(dir, v)
+      val next = cur.withProp("graft.partitioning", spec)
       // striking bucket ids changes manifest lines but no live content —
       // a content-preserving #rewrite, so incremental consumers skip it
-      val ok =
-        if (bucketChanged) commitRewrite(dir, body, v)
-        else commit(dir, body, v)
-      if (ok) return v + 1
-      attempt += 1
+      Some(if (!bucketChanged) next -> Kind.Data
+        else next.copy(files = cur.files.map(
+          _.replaceAll(";__bucket=\\d+", ""))) -> Kind.Rewrite)
     }
-    throw new IllegalStateException(
-      s"setPartitioning lost $maxRetries commit races in $dir")
+    commitLoop(dir, "setPartitioning")(step)
   }
 
-  def rebucket(s: SparkSession, dir: String, maxRetries: Int = 10): Int = {
+  def rebucket(s: SparkSession, dir: String): Int = {
     import org.apache.spark.sql.functions.{col => c}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      require(v >= 0, s"no committed snapshot to rebucket in $dir")
-      val spec = tableProperties(dir, v).getOrElse("graft.partitioning",
+    def step(cur: Snapshot): Option[(Snapshot, Kind)] = {
+      require(cur.version >= 0, s"no committed snapshot to rebucket in $dir")
+      val spec = cur.properties.getOrElse("graft.partitioning",
         throw new IllegalArgumentException(
           s"rebucket($dir): table declares no partitioning"))
       val (ids, bks) = GraftCatalog.partitionCols(spec)
       require(ids.isEmpty && bks.size == 1,
         s"rebucket($dir): exactly one bucket transform required, got $spec")
       val (n, colName) = bks.head
-      require(renameLines(dir, v).isEmpty,
+      require(cur.renames.isEmpty,
         s"rebucket($dir) refused: rename markers present — compact first")
-      val lines = listLines(dir, v)
-      if (lines.isEmpty) return v
-      val entries = lines.map(parseEntry)
+      if (cur.files.isEmpty) return None
+      val entries = cur.entries
       val statsCols = entries
         .flatMap(e => e.ranges.keys ++ e.strRanges.keys).distinct
       // a full rewrite MATERIALIZES deletion vectors (exactly like
@@ -3662,27 +3273,25 @@ object ManifestTable {
       // re-arms its storage-partitioned joins in ONE pass instead of
       // compact-then-rebucket
       val df =
-        if (dvLines(dir, v).nonEmpty)
-          readWithDvs(s, dir, v, entries.map(_.name))
+        if (cur.dvs.nonEmpty)
+          readWithDvs(s, dir, cur, entries.map(_.name))
         else s.read.option("mergeSchema", "true")
           .parquet(entries.map(e => dataPath(dir, e.name)): _*)
       val clustered = df.repartition(n, c(colName))
-      val sortCols = tableProperties(dir, v).get("graft.write.sort").toSeq
+      val sortCols = cur.properties.get("graft.write.sort").toSeq
         .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
       val shaped = if (sortCols.isEmpty) clustered
         else clustered.sortWithinPartitions(sortCols.map(c): _*)
-      def declared(key: String): Seq[String] = tableProperties(dir, v)
+      def declared(key: String): Seq[String] = cur.properties
         .get(key).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
         .filter(df.columns.contains)
       val staged = stageWithIndexes(s, dir, shaped, statsCols = statsCols,
         bloomCols = Seq(colName), recordBucket = true,
         ndvCols = declared("graft.write.ndv"),
         sumCols = declared("graft.write.sum"))
-      if (commitRewrite(dir, staged ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; staged files stay harmless orphans
+      Some(cur.copy(files = staged, dvs = Nil) -> Kind.Rewrite)
     }
-    throw new IllegalStateException(
-      s"rebucket lost $maxRetries commit races in $dir")
+    commitLoop(dir, "rebucket")(step)
   }
 
   /** ACID MERGE WHEN NOT MATCHED THEN INSERT: anti-join `batch` against the
@@ -3703,17 +3312,10 @@ object ManifestTable {
     * merge of the same disjoint batch: existing lines + staged files, DV /
     * rename / table-property markers carried forward, same CAS retry.
     * Callers that cannot prove disjointness must use [[merge]]. */
-  def append(s: SparkSession, dir: String, batch: DataFrame,
-      maxRetries: Int = 10): Int = {
+  def append(s: SparkSession, dir: String, batch: DataFrame): Int = {
     val staged = stage(s, dir, batch) // version-independent: stage once
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      if (commit(dir, listLines(dir, v) ++ staged ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ carriedMeta(dir, v), v)) return v + 1
-      attempt += 1 // lost the race; the staged files are version-agnostic
-    }
-    throw new IllegalStateException(s"append lost $maxRetries commit races in $dir")
+    commitLoop(dir, "append")(cur =>
+      Some(cur.copy(files = cur.files ++ staged) -> Kind.Data))
   }
 
   /** [[append]] for a SEQUENCE of provably-disjoint batches: staging is
@@ -3725,39 +3327,24 @@ object ManifestTable {
     * (same lines in the same order, same version arithmetic, same retry).
     * Callers own [[append]]'s disjointness proof, extended pairwise
     * across the batches. */
-  def appendAll(s: SparkSession, dir: String, batches: Seq[DataFrame],
-      maxRetries: Int = 10): Int = {
+  def appendAll(s: SparkSession, dir: String, batches: Seq[DataFrame]): Int = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = overlapEc
     val stagedAll = Await.result(
       Future.traverse(batches)(b => Future(stage(s, dir, b))), Duration.Inf)
-    var last = currentVersion(dir)
-    stagedAll.foreach { staged =>
-      var attempt = 0
-      var done = false
-      while (!done && attempt < maxRetries) {
-        val v = currentVersion(dir)
-        if (commit(dir, listLines(dir, v) ++ staged ++ dvLines(dir, v) ++
-            renameLines(dir, v) ++ carriedMeta(dir, v), v)) {
-          last = v + 1; done = true
-        } else attempt += 1 // lost a race; staged files stay harmless orphans
-      }
-      if (!done) throw new IllegalStateException(
-        s"appendAll lost $maxRetries commit races in $dir")
+    stagedAll.foldLeft(currentVersion(dir)) { (_, staged) =>
+      commitLoop(dir, "appendAll")(cur =>
+        Some(cur.copy(files = cur.files ++ staged) -> Kind.Data))
     }
-    last
   }
 
   def merge(s: SparkSession, dir: String, batch: DataFrame,
-      keyCols: Seq[String], skipEmptyDelta: Boolean = true,
-      maxRetries: Int = 10): Int = {
+      keyCols: Seq[String], skipEmptyDelta: Boolean = true): Int = {
     def k(seed: String, cols: Seq[Column]) =
       if (seed.isEmpty) xxhash64(cols: _*) else xxhash64(lit(seed) +: cols: _*)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val v = currentVersion(dir)
-      val existing = listLines(dir, v) // raw lines: per-file stats carry forward
+    def step(cur: Snapshot): Option[(Snapshot, Kind)] = {
+      val v = cur.version
       val cols = keyCols.map(batch.col)
       val fresh =
         if (v < 0) batch
@@ -3784,16 +3371,14 @@ object ManifestTable {
       if (skipEmptyDelta &&
           staged.forall(n => footerRowCount(Paths.get(dir, "data", n)) == 0L)) {
         staged.foreach(n => Files.deleteIfExists(Paths.get(dir, "data", n)))
-        return v // idempotent no-op
+        return None // idempotent no-op
       }
-      // DV and rename markers ride along: the kept data files are
-      // unchanged, so every DV still targets exactly what it did, and the
-      // rename chain keeps reconciling the older generations
-      if (commit(dir, existing ++ staged ++ dvLines(dir, v) ++
-          renameLines(dir, v) ++ carriedMeta(dir, v), v)) return v + 1
-      // lost the race: the staged files stay harmless orphans; re-reconcile
-      attempt += 1
+      // raw lines carry forward with their per-file stats, and DV and
+      // rename markers ride along: the kept data files are unchanged, so
+      // every DV still targets exactly what it did
+      Some(cur.copy(files = cur.files ++ staged) -> Kind.Data)
     }
-    throw new IllegalStateException(s"merge lost $maxRetries commit races in $dir")
+    // a lost race re-runs the reconcile against the winner's snapshot
+    commitLoop(dir, "merge")(step)
   }
 }

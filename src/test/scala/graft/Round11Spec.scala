@@ -138,9 +138,9 @@ class Round11Spec extends AnyFunSuite {
     Thread.sleep(1100) // distinct commit instants at millis granularity
     val s1 = ManifestTable.stage(spark, dir, ev.filter(col("event_id") % 2 =!= 0))
     assert(ManifestTable.commit(dir, ManifestTable.listLines(dir, 0) ++ s1, 0))
-    val t0 = ManifestTable.commitInstantMillis(dir, 0)
+    val t0 = ManifestTable.snapshot(dir, 0).ts
       .getOrElse(fail("v0 must carry a #ts marker"))
-    val t1 = ManifestTable.commitInstantMillis(dir, 1)
+    val t1 = ManifestTable.snapshot(dir, 1).ts
       .getOrElse(fail("v1 must carry a #ts marker"))
     assert(t0 < t1)
     // a directory copy / backup-restore rewrites mtimes; simulate the
@@ -253,9 +253,6 @@ class Round11Spec extends AnyFunSuite {
     assert(like.count() ==
       ManifestTable.read(spark, dir)
         .filter(col("l_returnflag").startsWith("R")).count())
-    // the API leg agrees with the catalog leg
-    val (kept, total) = ManifestTable.pruneFilesStr(dir, 0, "l_returnflag", "R")
-    assert(kept.nonEmpty && kept.size < total)
     // truncation safety: a >32-byte value keeps a sound (bumped) envelope
     val longStr = "z" * 40
     val dir2 = s"$root/long"
@@ -541,7 +538,7 @@ class Round11Spec extends AnyFunSuite {
           java.util.Arrays.compareUnsigned(x, hi) <= 0
       }
     val (entries, segsRead, segsTotal, filesTotal) =
-      ManifestTable.segmentedEntries(dir, 0, admit)
+      ManifestTable.segmentedEntries(ManifestTable.snapshot(dir, 0), admit)
         .getOrElse(fail("must be a segmented manifest"))
     assert(segsTotal == 3 && segsRead < segsTotal,
       s"the string envelope must prune segments ($segsRead/$segsTotal)")
@@ -1282,7 +1279,7 @@ class Round11Spec extends AnyFunSuite {
     assert(v3Only.nonEmpty)
     // cutoff AFTER v4's instant: v0..v4 are "old"; keep_last=1 keeps the
     // head, the tag keeps v1 — v0/v2/v3/v4 expire
-    val cutoff = ManifestTable.commitInstantMillis(dir, 4).get + 1
+    val cutoff = ManifestTable.snapshot(dir, 4).ts.get + 1
     spark.sql(s"CALL g11ex.system.expire(table => 't', " +
       s"older_than_millis => ${cutoff}L, keep_last => 1)")
     assert(!java.nio.file.Files.exists(
